@@ -51,6 +51,25 @@ def staging_key(sf_dir: str) -> str:
     return f"{p.name or 'sf'}-{hashlib.md5(str(p).encode()).hexdigest()[:8]}"
 
 
+def local_relation(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """Driver rows as a ``LocalRelation`` (built through Arrow), for
+    request-sized relations computed on the driver: the rows cross to
+    the JVM as columnar batches and the plan holds them inline, where a
+    Python list passed to ``createDataFrame`` is pickled row by row into
+    an RDD-backed ``LogicalRDD``. ``schema`` is a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet`` with a timestamp-normalization shim.
 

@@ -307,6 +307,16 @@ def candidate_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
+def _env_number(name: str, parse, default):
+    """``parse(os.environ[name])``, or ``default`` when the variable is
+    unset or malformed — a bad tuning knob must not crash the dedup
+    pipeline (the guard it feeds is an optimization, not a contract)."""
+    try:
+        return parse(os.environ[name])
+    except (KeyError, ValueError):
+        return default
+
+
 def _verify_build_hint(docs: DataFrame) -> str | None:
     """Join-strategy guard for corpus-sized verify joins (r16, VERDICT
     r15 item 7 / guide §3.1): Catalyst underestimates the doc→token-set
@@ -329,8 +339,8 @@ def _verify_build_hint(docs: DataFrame) -> str | None:
         )
     except Exception:  # pragma: no cover — py4j surface moved
         return None
-    factor = float(os.environ.get("DQE_VERIFY_SET_BYTES_FACTOR", "3"))
-    cap = int(os.environ.get("DQE_VERIFY_BROADCAST_CAP", str(256 * 1024**2)))
+    factor = _env_number("DQE_VERIFY_SET_BYTES_FACTOR", float, 3.0)
+    cap = _env_number("DQE_VERIFY_BROADCAST_CAP", int, 256 * 1024**2)
     return "shuffle_hash" if est * factor > cap else None
 
 

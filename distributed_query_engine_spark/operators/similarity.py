@@ -1377,7 +1377,8 @@ def _panel_probe_qdt(
     residual: bool,
 ):
     """Driver-side probe sets + ADC distance tables for a query panel
-    whose vectors are all inside the collected lowest-K window — the
+    whose vectors are collected in ``low_map`` (the lowest-K window of
+    an in-memory build, or the index search's panel lookup) — the
     panel is request metadata (the bm25 qterms-collect class), and
     every quantity here is panel × index-knob sized. Pure-Python exact
     integer arithmetic: ||a−b||² over int components equals the
@@ -1661,36 +1662,52 @@ def _dim_guard(
     return guarded
 
 
-def _stored_index_shape(cb: DataFrame) -> "tuple[int, int]":
-    """Derive ``(m_sub, dim)`` from a STORED codebook relation —
-    ``dim = m_sub × len(c_sv)`` (r12 ADVICE: :func:`_probe_dim_strict`
-    only enforces internal homogeneity of a new batch, so a batch with
-    a different-but-homogeneous dim used to zip_with against mismatched
-    centroids and silently append NULL-component garbage codes). One
-    scalar aggregate over the broadcast-sized codebooks; callers raise
-    on any mismatch against the incoming batch/query shape."""
-    row = cb.agg(
-        F.count_distinct("m").alias("m_sub"),
-        F.min(F.size("c_sv")).alias("sv_lo"),
-        F.max(F.size("c_sv")).alias("sv_hi"),
-    ).first()
-    if row is None or row["m_sub"] == 0:
+def _panel_dim(panel: dict, m_sub: int) -> int:
+    """The :func:`_probe_dim_strict` guards for a query panel already
+    collected as {q_id: ivec}, checked on the driver: non-empty, every
+    vector of one dim, that dim divisible by ``m_sub``."""
+    if not panel:
+        raise ValueError("PQ: empty corpus — no vectors to index")
+    ids = sorted(panel)
+    dim = len(panel[ids[0]])
+    if dim % m_sub:
+        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
+    for qid in ids:
+        if len(panel[qid]) != dim:
+            raise ValueError(
+                f"PQ requires homogeneous vector dims: expected {dim}, got "
+                f"{len(panel[qid])} (q_id {qid})"
+            )
+    return dim
+
+
+def _stored_index_shape(cb_rows: list) -> "tuple[int, int]":
+    """Derive ``(m_sub, dim)`` from a STORED index's collected codebook
+    rows [(m, code_id, c_sv)] — ``dim = m_sub × len(c_sv)`` (r12 ADVICE:
+    :func:`_probe_dim_strict` only enforces internal homogeneity of a
+    new batch, so a batch with a different-but-homogeneous dim used to
+    zip_with against mismatched centroids and silently append
+    NULL-component garbage codes). Callers raise on any mismatch
+    against the incoming batch/query shape."""
+    if not cb_rows:
         raise ValueError("IVF-PQ index: empty codebooks relation")
-    if row["sv_lo"] != row["sv_hi"]:
+    lens = [len(sv) for _, _, sv in cb_rows]
+    if min(lens) != max(lens):
         raise ValueError(
             "IVF-PQ index: corrupt codebooks (ragged subvector lengths "
-            f"{row['sv_lo']}..{row['sv_hi']})"
+            f"{min(lens)}..{max(lens)})"
         )
-    return int(row["m_sub"]), int(row["m_sub"]) * int(row["sv_lo"])
+    m_stored = len({m for m, _, _ in cb_rows})
+    return m_stored, m_stored * lens[0]
 
 
 def _check_against_stored_index(
-    cb: DataFrame, m_sub: int, dim: int, what: str
+    cb_rows: list, m_sub: int, dim: int, what: str
 ) -> None:
     """Raise unless ``(m_sub, dim)`` of an incoming batch/query matches
     the stored index's shape — the 'mixed-dim must fail loudly'
     contract extended across index generations (r12 ADVICE)."""
-    m_stored, dim_stored = _stored_index_shape(cb)
+    m_stored, dim_stored = _stored_index_shape(cb_rows)
     if m_sub != m_stored or dim != dim_stored:
         raise ValueError(
             f"IVF-PQ index shape mismatch: stored index has m_sub="
@@ -1765,6 +1782,9 @@ def topk_l2_pq(
 
 
 _CENTS_SCHEMA = "cell_id long, c_ivec array<long>"
+_CB_SCHEMA = "m int, code_id long, c_sv array<long>"
+# the stored codes layout; cell_id is the partition column
+_CODES_SCHEMA = "vec_id long, m int, code_id long, cell_id long"
 
 
 def _collect_cents_rows(base: DataFrame, n_cells: int) -> list:
@@ -1787,64 +1807,30 @@ def _collect_cents_rows(base: DataFrame, n_cells: int) -> list:
     ]
 
 
-def _assign_to_l2(base: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, cell_id): nearest-centroid assignment by EXACT-INTEGER
-    squared L2 (ties → lowest cell id) — the IVF-PQ variant of
-    :func:`_assign_to` (whose cosine needs a float divide; L2 keeps the
-    whole IVF-PQ pipeline integer-pure).
-
-    Execution (r15 optimization round): the same Arrow ``mapInPandas``
-    blocked-matmul kernel as :func:`_assign_to` — centroids are
-    driver-bounded (≤ n_cells rows), the corpus scans once, no exchange
-    at all (the old crossJoin + max_by form exchanged ~|corpus| rows and
-    paid an interpreted HOF distance per vector × cell). Exactness is
-    the :func:`_pq_assign` argument: −2·v·c + ||c||² is an exact
-    integer in float64 at our fixed-point magnitudes (components < 2²³,
-    128-dim partial sums < 2⁵³), and ``np.argmin`` over cell-ascending
-    columns reproduces the (−dist, −cell_id) tie-break."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    crows = cents.select("cell_id", "c_ivec").collect()
-    crows.sort(key=lambda r: r["cell_id"])
-    cell_ids = np.array([r["cell_id"] for r in crows], dtype=np.int64)
-    C = np.array([r["c_ivec"] for r in crows], dtype=np.float64)
-    cn = (C * C).sum(axis=1) if len(crows) else np.empty(0)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cell_id", T.LongType()),
-        ]
-    )
-
-    def _nearest_l2(batches):
-        for pdf in batches:
-            if pdf.empty or not len(cell_ids):
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pd.Series(dtype="int64"),
-                        "cell_id": pd.Series(dtype="int64"),
-                    }
-                )
-                continue
-            V = np.stack(pdf["ivec"].to_numpy()).astype(np.float64)
-            # block rows so the (rows x n_cells) distance matrix stays
-            # ~32 MiB even at the 65536-cell cap
-            block = max(16, (4 << 20) // max(1, len(cell_ids)))
-            best = np.empty(len(V), dtype=np.int64)
-            for i0 in range(0, len(V), block):
-                d = cn[None, :] - 2.0 * (V[i0:i0 + block] @ C.T)
-                best[i0:i0 + block] = np.argmin(d, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell_id": cell_ids[best],
-                }
-            )
-
-    return base.select("vec_id", "ivec").mapInPandas(_nearest_l2, out_schema)
+def _load_ivfpq_quantizer(
+    spark, index_path: str, m_sub: int, dim: int, what: str
+) -> "tuple[list, list]":
+    """The stored quantizer of a :func:`build_ivfpq_index` artifact as
+    driver rows — (centroid rows [(cell_id, c_ivec)], codebook rows
+    [(m, code_id, c_sv)]) — checked against the incoming batch/query
+    shape ``(m_sub, dim)``. Both relations are driver-bounded by
+    construction (the build holds them as driver state) and are read
+    with their fixed schemas, so the load is exactly one scan job each
+    — no schema-inference job, no aggregate for the shape check."""
+    cent_rows = [
+        (r["cell_id"], list(r["c_ivec"]))
+        for r in spark.read.schema(_CENTS_SCHEMA)
+        .parquet(f"{index_path}/centroids")
+        .collect()
+    ]
+    cb_rows = [
+        (r["m"], r["code_id"], list(r["c_sv"]))
+        for r in spark.read.schema(_CB_SCHEMA)
+        .parquet(f"{index_path}/codebooks")
+        .collect()
+    ]
+    _check_against_stored_index(cb_rows, m_sub, dim, what)
+    return cent_rows, cb_rows
 
 
 def topk_l2_ivfpq(
@@ -1896,7 +1882,7 @@ def topk_l2_ivfpq(
     cents = spark.createDataFrame(cent_rows, _CENTS_SCHEMA)
     seeds = _pq_seed_rows(low_rows, dim, m_sub, k_codes, 0)
     cb_rows = _pq_codebooks_rows(base, dim, m_sub, k_codes, lloyd_iters, seeds)
-    cb = spark.createDataFrame(cb_rows, "m int, code_id long, c_sv array<long>")
+    cb = spark.createDataFrame(cb_rows, _CB_SCHEMA)
     enc = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual=False)
     low_map = dict(low_rows)
     if all(qid in low_map for qid in query_ids):
@@ -2011,7 +1997,7 @@ def topk_l2_ivfpq_residual(
     cb_rows = _pq_codebooks_rows(
         base, dim, m_sub, k_codes, lloyd_iters, seeds, cent_rows=cent_rows
     )
-    cb = spark.createDataFrame(cb_rows, "m int, code_id long, c_sv array<long>")
+    cb = spark.createDataFrame(cb_rows, _CB_SCHEMA)
     enc = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual=True)
     low_map = dict(low_rows)
     if all(qid in low_map for qid in query_ids):
@@ -2126,7 +2112,7 @@ def build_ivfpq_index(
     cb_rows = _pq_codebooks_rows(
         base, dim, m_sub, k_codes, lloyd_iters, seeds, cent_rows=cent_rows
     )
-    cb = spark.createDataFrame(cb_rows, "m int, code_id long, c_sv array<long>")
+    cb = spark.createDataFrame(cb_rows, _CB_SCHEMA)
     codes = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual=True)
     cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
     cb.write.mode("overwrite").parquet(f"{index_path}/codebooks")
@@ -2143,36 +2129,26 @@ def append_to_ivfpq_index(
     artifact WITHOUT retraining — the compressed-index twin of
     :func:`append_to_ivf_index`: the stored quantizer (centroids +
     codebooks) is a versioned artifact whose retrain would invalidate
-    every stored code, so ingest is (1) one broadcast of the stored
-    centroids against the batch scan (coarse assignment), (2) one
-    broadcast of the stored codebooks against the batch's residual
-    subvectors (encode), and (3) an append of part-files into the
-    cell-partitioned codes layout — existing files never rewritten,
-    searches see the new codes immediately through the same
-    partition-pruned reads. Batch-sized work only; the corpus is never
-    rescanned."""
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    cb = spark.read.parquet(f"{index_path}/codebooks")
+    every stored code, so ingest (1) loads it as driver rows, shape-
+    checked against the batch (:func:`_load_ivfpq_quantizer`), (2)
+    encodes the batch in ONE pass of the build's own fused kernel
+    (:func:`_ivfpq_codes`: coarse assignment, residual shift and PQ
+    encode — appended codes are exactly the codes a build would store),
+    and (3) appends part-files into the cell-partitioned codes layout —
+    existing files never rewritten, searches see the new codes
+    immediately through the same partition-pruned reads. Batch-sized
+    work only; the corpus is never rescanned."""
     narrow = with_int_vec(emb_new).filter(F.size("ivec") > 0).select(
         "vec_id", "ivec"
     )
     dim, narrow = _probe_dim_strict(narrow, m_sub)
-    _check_against_stored_index(cb, m_sub, dim, "ingest batch")
-    assigned = _assign_to_l2(narrow, cents)
-    res = (
-        narrow.join(assigned, "vec_id")
-        .join(F.broadcast(cents), "cell_id")
-        .select(
-            "vec_id",
-            F.zip_with("ivec", "c_ivec", lambda x, c: x - c).alias("ivec"),
-        )
+    cent_rows, cb_rows = _load_ivfpq_quantizer(
+        spark, index_path, m_sub, dim, "ingest batch"
     )
-    codes = _pq_assign(_pq_subvecs(res, dim, m_sub), cb).select(
-        "vec_id", "m", "code_id"
-    )
-    codes.join(assigned, "vec_id").write.mode("append").partitionBy(
-        "cell_id"
-    ).parquet(f"{index_path}/codes")
+    codes = _ivfpq_codes(narrow, dim, m_sub, cent_rows, cb_rows, residual=True)
+    codes.select("vec_id", "m", "code_id", "cell_id").write.mode(
+        "append"
+    ).partitionBy("cell_id").parquet(f"{index_path}/codes")
 
 
 def topk_l2_ivfpq_index(
@@ -2187,62 +2163,48 @@ def topk_l2_ivfpq_index(
     """Search a :func:`build_ivfpq_index` artifact — identical results
     to :func:`topk_l2_ivfpq_residual` for the same corpus and knobs
     (the index stores exactly the relations that function derives).
-    Centroids and codebooks broadcast; the query vectors come from one
-    point-lookup-shaped read of the embeddings relation; the codes
-    scan is restricted to probed cells by dynamic partition pruning —
+
+    The index metadata work runs on the driver, so Spark runs only the
+    pruned scan and the ranking: the panel vectors (one
+    point-lookup-shaped read of the embeddings relation), the centroids
+    and the codebooks are collected; the shape checks, the probe sets
+    and the per-(query, probed cell) residual distance tables are
+    computed in exact integer Python (:func:`_panel_probe_qdt`) and
+    enter the plan as ONE broadcast local relation. The codes scan is
+    restricted to the probed cells by a literal ``cell_id IN (...)``
+    partition filter — request metadata, like the bm25 ``tok IN`` — so
     at 100 TB a search reads n_probe/n_cells of a few-ints-per-vector
-    relation and nothing else."""
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    cb = spark.read.parquet(f"{index_path}/codebooks")
-    # partition-column type inference narrows small cell ids to int;
-    # restore the long the in-memory relations carry
-    codes = spark.read.parquet(f"{index_path}/codes").withColumn(
-        "cell_id", F.col("cell_id").cast("long")
-    )
-    q_narrow = (
-        with_int_vec(emb)
+    relation and nothing else. Query ids absent from ``emb`` yield no
+    rows."""
+    from distributed_query_engine_spark.catalog import local_relation
+
+    panel = {
+        r["vec_id"]: list(r["ivec"])
+        for r in with_int_vec(emb)
         .filter(F.col("vec_id").isin(query_ids) & (F.size("ivec") > 0))
-        .select(F.col("vec_id").alias("q_id"), "ivec")
+        .select("vec_id", "ivec")
+        .collect()
+    }
+    dim = _panel_dim(panel, m_sub)
+    cent_rows, cb_rows = _load_ivfpq_quantizer(
+        spark, index_path, m_sub, dim, "query panel"
     )
-    dim, q_guarded = _probe_dim_strict(q_narrow, m_sub, id_col="q_id")
-    _check_against_stored_index(cb, m_sub, dim, "query panel")
-    q = q_guarded.select("q_id", F.col("ivec").alias("q_ivec"))
-    pw = Window.partitionBy("q_id").orderBy("p_dist", "cell_id")
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id",
-            "cell_id",
-            _pq_dist(F.col("q_ivec"), F.col("c_ivec")).alias("p_dist"),
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= n_probe)
-        .select("q_id", "cell_id")
+    probe_rows, qdt_rows = _panel_probe_qdt(
+        panel, sorted(panel), cent_rows, cb_rows, dim, m_sub, n_probe,
+        residual=True,
     )
-    qres = (
-        probes.join(q, "q_id")
-        .join(F.broadcast(cents), "cell_id")
-        .select(
-            "q_id",
-            "cell_id",
-            F.zip_with("q_ivec", "c_ivec", lambda x, c: x - c).alias("ivec"),
-        )
+    # the residual distance table carries cell_id, so it also carries
+    # the probe sets: one join replaces codes ⋈ probes ⋈ q_dt
+    q_dt = local_relation(
+        spark, qdt_rows, "q_id long, cell_id long, m int, code_id long, dist long"
     )
-    q_dt = (
-        _pq_subvecs(qres, dim, m_sub, keys=("q_id", "cell_id"))
-        .withColumnRenamed("sv", "q_sv")
-        .join(F.broadcast(cb), "m")
-        .select(
-            "q_id",
-            "cell_id",
-            "m",
-            "code_id",
-            _pq_dist(F.col("q_sv"), F.col("c_sv")).alias("dist"),
-        )
+    codes = (
+        spark.read.schema(_CODES_SCHEMA)
+        .parquet(f"{index_path}/codes")
+        .filter(F.col("cell_id").isin(sorted({c for _, c in probe_rows})))
     )
     scored = (
-        codes.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(q_dt), ["q_id", "cell_id", "m", "code_id"])
+        codes.join(F.broadcast(q_dt), ["cell_id", "m", "code_id"])
         .filter(F.col("vec_id") != F.col("q_id"))
         .groupBy("q_id", "vec_id")
         .agg(F.sum("dist").alias("adc_dist"))

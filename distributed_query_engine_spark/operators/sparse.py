@@ -14,7 +14,8 @@ serve stale postings):
   — one directory per token would melt the namenode; N fixed bucket
   files is the standard layout. ``dl`` rides denormalized in the posting
   row so scoring never joins a doc-length table.
-- ``stats`` — (tok, df): vocabulary-sized, broadcast at query time.
+- ``stats`` — (tok, df): vocabulary-sized; a search collects only its
+  terms' rows.
 - ``corpus`` — (n_docs, a_tok): one row.
 
 Query-time: the query's terms are DRIVER-SIDE LITERALS (a search query
@@ -39,6 +40,10 @@ from pyspark.sql.window import Window
 from distributed_query_engine_spark.functions import text as T
 
 N_BUCKETS = 32
+# the fixed schemas of the stats/corpus relations write_bm25_index and
+# append_to_bm25_index write (read with them, no schema inference)
+_STATS_SCHEMA = "tok string, df long"
+_CORPUS_SCHEMA = "n_docs long, a_tok long"
 
 _TMP = Path(__file__).resolve().parents[2] / ".tmp"
 
@@ -128,10 +133,10 @@ def append_to_bm25_index(
       scan reads old+new files of only the query terms' buckets.
     - ``stats`` / ``corpus``: per-batch PARTIALS append; document sets
       of batches are disjoint, so df / n_docs / a_tok merge by SUM at
-      read time (bm25_search_index aggregates the vocabulary-sized
-      relation before broadcasting — pennies). No read-modify-write
-      cycle anywhere: ingest cost is ONE scan of the BATCH, never a
-      rewrite of existing index files.
+      read time (bm25_search_index sums the query terms' partials on
+      the driver — pennies). No read-modify-write cycle anywhere:
+      ingest cost is ONE scan of the BATCH, never a rewrite of existing
+      index files.
 
     Doc lengths (dl) are per-document, so batch-local computation is
     exact; idf/avgdl come from the SUMMED stats, hence search over an
@@ -213,9 +218,15 @@ def bm25_search_index(
     query searches its pid-keyed, append-mutated index).
 
     stats/corpus may hold per-ingest-batch PARTIALS (append_to_bm25_
-    index): df / n_docs / a_tok are summed here — a vocabulary-sized
-    aggregate feeding a broadcast, so merge-at-read costs nothing at
-    any scale and keeps the index artifact append-only."""
+    index): df / n_docs / a_tok are summed here, on the driver — the
+    query terms' stats rows and the corpus scalars are request-sized
+    once the literal ``tok IN`` prunes the stats scan, so they are
+    collected (one small job each, read with their fixed schemas: no
+    schema-inference job) and summed in Python, and the scored plan
+    broadcasts ONE local relation (q_id, tok, df, n_docs, a_tok) held
+    inline in the plan."""
+    from distributed_query_engine_spark.catalog import local_relation
+
     if milli_sql is None:
         from distributed_query_engine_spark.plans.retrieval import _BM25_MILLI_SQL
 
@@ -225,34 +236,34 @@ def bm25_search_index(
         tbl = f"bm25_postings_{tag}"
     postings = spark.table(tbl)
     # compacted=True reads the folded single-relation stats a
-    # compact_bm25_index pass produced (the SUM below is then a no-op
-    # over one partial — kept for one uniform plan shape).
+    # compact_bm25_index pass produced (the sums below then run over
+    # one partial — kept for one uniform path).
     sfx = "_compact" if compacted else ""
     terms = sorted({t for _, t in qterms})
-    # Only the query terms' df values are consumed (the q join below
-    # restricts to them anyway) — filtering BEFORE the merge aggregate
-    # pushes the literal IN into the stats parquet scan, so the
-    # vocabulary-sized relation is pruned at the source (§6).
-    stats = (
-        spark.read.parquet(str(base / f"stats{sfx}"))
+    df_by_tok: dict = {}
+    for r in (
+        spark.read.schema(_STATS_SCHEMA)
+        .parquet(str(base / f"stats{sfx}"))
         .filter(F.col("tok").isin(terms))
-        .groupBy("tok")
-        .agg(F.sum("df").alias("df"))
+        .collect()
+    ):
+        df_by_tok[r["tok"]] = df_by_tok.get(r["tok"], 0) + r["df"]
+    parts = (
+        spark.read.schema(_CORPUS_SCHEMA).parquet(str(base / f"corpus{sfx}")).collect()
     )
-    corpus = spark.read.parquet(str(base / f"corpus{sfx}")).agg(
-        F.sum("n_docs").alias("n_docs"), F.sum("a_tok").alias("a_tok")
+    n_docs = sum(r["n_docs"] for r in parts)
+    a_tok = sum(r["a_tok"] for r in parts)
+    # the inner join of the query terms with the vocabulary stats, and
+    # the cross join with the corpus scalars, done on the driver
+    q_stats = local_relation(
+        spark,
+        [
+            (q_id, tok, df_by_tok[tok], n_docs, a_tok)
+            for q_id, tok in qterms
+            if tok in df_by_tok
+        ],
+        "q_id long, tok string, df long, n_docs long, a_tok long",
     )
-    q = spark.createDataFrame(qterms, "q_id long, tok string")
-    # ONE broadcast relation (q_id, tok, df, n_docs, a_tok) instead of
-    # three (q, stats, corpus): the inner joins are associative, so
-    # pre-joining the query terms with the vocabulary stats and corpus
-    # scalars is result-identical, and the postings-side plan carries a
-    # single broadcast hash join — one broadcast build job per search
-    # where there were three, and a smaller plan for the bucket-pruned
-    # planner pass (r16, guide §2.4/§5; measured in OPTIMIZATION_r16.md).
-    # The build stays a distributed aggregate feeding a broadcast — at
-    # scale the vocabulary-sized stats never lands on the driver.
-    q_stats = q.join(stats, "tok").crossJoin(corpus)
     scored = (
         postings.filter(F.col("tok").isin(terms))
         .join(F.broadcast(q_stats), "tok")

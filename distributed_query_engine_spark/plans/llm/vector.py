@@ -837,9 +837,11 @@ def llm_similarity_ivfpq_index(spark, sf_dir):
     vector store maintains on disk (operators/similarity.py::
     build_ivfpq_index / topk_l2_ivfpq_index): broadcast-sized
     ``centroids/`` and ``codebooks/`` plus a ``codes/`` relation of
-    M_SUB small ints per vector PARTITIONED BY cell_id, so the search
-    scan is restricted to probed cells by dynamic partition pruning
-    (plan-asserted, like llm_similarity_ivf_index) — at 100 TB a
+    M_SUB small ints per vector PARTITIONED BY cell_id. A search
+    collects the panel vectors, centroids and codebooks, computes the
+    probe sets and residual distance tables on the driver, and
+    restricts the codes scan to the probed cells with a literal
+    ``cell_id IN (...)`` partition filter (plan-asserted) — at 100 TB a
     search reads n_probe/n_cells of the compressed index and nothing
     else; raw vectors are touched only at build (and in the optional
     re-rank stage). Results are bit-identical to the in-memory
@@ -887,9 +889,10 @@ def llm_similarity_ivfpq_incremental(spark, sf_dir):
     llm_similarity_ivf_incremental: build the residual IVF-PQ index
     from the existing 90% of the corpus, ingest the new 10% batch by
     assigning it to the STORED cells and encoding it with the STORED
-    codebooks (operators/similarity.py::append_to_ivfpq_index — two
-    broadcast passes over the BATCH, an append of part-files into the
-    cell-partitioned codes layout, existing files never rewritten),
+    codebooks (operators/similarity.py::append_to_ivfpq_index — the
+    stored quantizer collected to the driver, one fused encode pass
+    over the BATCH, an append of part-files into the cell-partitioned
+    codes layout, existing files never rewritten),
     then search the updated index. The quantizer is a versioned
     artifact — retraining would invalidate every stored code — so the
     oracle replays exactly that contract: Lloyd trains on the existing

@@ -476,6 +476,26 @@ def _stage_docs_sliced(spark: SparkSession, sf_dir: str, n_slices: int) -> Path:
     return d
 
 
+def _prior_store_generations(store: Path, current: Path) -> list[str]:
+    """The signature store's generation dirs other than ``current`` (the
+    batch's own, already written), sorted. A store written before the
+    r16 generation layout keeps its parquet files at the root and has
+    no generation dirs; resuming on one must fail here, by name, not
+    inside ``spark.read.parquet()`` of an empty path list."""
+    prior = sorted(
+        str(p)
+        for p in store.iterdir()
+        if p.is_dir() and p != current and not p.name.startswith("_")
+    )
+    if not prior:
+        raise RuntimeError(
+            f"signature store {store} predates the r16 generation layout "
+            "(no generation dirs beside the current batch's); rebuild it "
+            "by running without _resume"
+        )
+    return prior
+
+
 def stream_ingest_dedup(
     spark: SparkSession,
     sf_dir: str,
@@ -599,11 +619,7 @@ def stream_ingest_dedup(
             D.signatures_rowlocal(batch_df, spread=True)
         ).write.mode("overwrite").parquet(str(store_b))
         gn = spark.read.parquet(str(store_b))
-        prior_dirs = sorted(
-            str(p)
-            for p in Path(store).iterdir()
-            if p.is_dir() and p != store_b and not p.name.startswith("_")
-        )
+        prior_dirs = _prior_store_generations(Path(store), store_b)
         report = D.incremental_dedup_from_store(
             spark,
             store,

@@ -47,10 +47,6 @@ def prof_ivfpq():
     dim, narrow = S._probe_dim_strict(narrow, S.PQ_M_SUB)
     base = _spread_narrow_scan(narrow, key="vec_id")
     t("ivfpq/base scan+spread", base)
-    cents = base.orderBy("vec_id").limit(S.N_CELLS).select(
-        F.col("vec_id").alias("cell_id"), F.col("ivec").alias("c_ivec"))
-    assigned = S._assign_to_l2(base, cents)
-    t("ivfpq/assign_to_l2 (cum)", assigned)
     subs = S._pq_subvecs(base, dim, S.PQ_M_SUB)
     t("ivfpq/subvecs (cum)", subs)
     cb = S.pq_codebooks(subs, S.PQ_K_CODES, S.PQ_LLOYD_ITERS)

@@ -50,3 +50,27 @@ def duck(sf_dir):
     con = make_duck(sf_dir)
     yield con
     con.close()
+
+
+def partition_filter_values(df, column: str) -> list[set[int]]:
+    """The literal value set of every ``column IN (...)`` partition
+    filter on the file scans of ``df``'s physical plan, read from the
+    plan nodes (the explain string abbreviates long value lists)."""
+    import re
+
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    found = []
+    for i in range(leaves.size()):
+        node = leaves.apply(i)
+        if node.getClass().getSimpleName() != "FileSourceScanExec":
+            continue
+        filters = node.partitionFilters()
+        for j in range(filters.size()):
+            m = re.fullmatch(
+                rf"{column}#\d+L? INSET (.*)|{column}#\d+L? IN \((.*)\)",
+                filters.apply(j).toString(),
+            )
+            if m:
+                vals = m.group(1) if m.group(1) is not None else m.group(2)
+                found.append({int(v) for v in re.findall(r"-?\d+", vals)})
+    return found

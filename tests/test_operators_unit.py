@@ -513,6 +513,40 @@ def test_verify_build_hint_guard(spark, sf_dir, monkeypatch):
     assert a == b
 
 
+def test_verify_build_hint_malformed_env_falls_back(spark, sf_dir, monkeypatch):
+    """A malformed DQE_VERIFY_SET_BYTES_FACTOR / DQE_VERIFY_BROADCAST_CAP
+    falls back to the default instead of crashing the dedup pipeline."""
+    from distributed_query_engine_spark.catalog import Tables
+    from distributed_query_engine_spark.operators import dedup as D
+
+    docs = Tables(spark, sf_dir).documents
+    monkeypatch.setenv("DQE_VERIFY_SET_BYTES_FACTOR", "three")
+    monkeypatch.setenv("DQE_VERIFY_BROADCAST_CAP", "256MB")
+    assert D._verify_build_hint(docs) is None
+    # one malformed knob does not disable the other
+    monkeypatch.setenv("DQE_VERIFY_BROADCAST_CAP", "1")
+    assert D._verify_build_hint(docs) == "shuffle_hash"
+
+
+def test_resume_on_flat_signature_store_raises_clearly(tmp_path):
+    """A signature store from before the generation-dir layout keeps its
+    parquet files at the root; resuming on it must name the problem
+    instead of failing inside spark.read.parquet() of no paths."""
+    from distributed_query_engine_spark.streaming.ops import (
+        _prior_store_generations,
+    )
+
+    store = tmp_path / "store"
+    current = store / "b0"
+    current.mkdir(parents=True)
+    (store / "part-00000.parquet").write_bytes(b"")
+    with pytest.raises(RuntimeError, match="predates the r16 generation layout"):
+        _prior_store_generations(store, current)
+    (store / "b_init").mkdir()
+    (store / "_applied").mkdir()
+    assert _prior_store_generations(store, current) == [str(store / "b_init")]
+
+
 def test_read_parquet_table_normalizes_any_timestamp_encoding(spark, tmp_path):
     # The driver's generator has emitted TIMESTAMP(NANOS) (rounds 1-4)
     # and timestamp[us]/NTZ (round 5). Whatever the footer says, every

@@ -871,13 +871,21 @@ def test_ivfpq_residual_plan_and_clustered_win(spark, sf_dir):
 
 def test_ivfpq_index_search_partition_prunes(spark, sf_dir):
     # The materialized residual IVF-PQ index stores codes PARTITIONED
-    # BY cell_id; the probe join must trigger dynamic partition pruning
-    # so the search reads only probed cells' code files, with
-    # centroids/codebooks/probe/distance-table relations broadcast and
-    # the ADC sum partial-aggregated — the 100 TB read-bound contract.
+    # BY cell_id; the search must prune the codes scan to the probed
+    # cells with a literal cell_id set (computed on the driver from the
+    # collected centroids — at most n_probe cells per panel query), so
+    # it reads only those cells' code files, with the per-(query,
+    # probed cell) distance table broadcast and the ADC sum
+    # partial-aggregated — the 100 TB read-bound contract.
+    from distributed_query_engine_spark.operators import similarity as S
+    from distributed_query_engine_spark.plans.llm._shared import _QUERY_IDS
+
+    from .conftest import partition_filter_values
+
     df = _q("llm_similarity_ivfpq_index", spark, sf_dir)
+    (cells,) = partition_filter_values(df, "cell_id")
+    assert 0 < len(cells) <= len(_QUERY_IDS) * S.N_PROBE, cells
     plan = _plan(df)
-    assert "dynamicpruning" in plan.lower(), plan
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "partial_sum" in plan, plan

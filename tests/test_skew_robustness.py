@@ -23,8 +23,6 @@ import subprocess
 import sys
 from pathlib import Path
 
-import pytest
-
 from tests.conftest import SF_UNIT, make_duck
 
 REPO = Path(__file__).resolve().parents[1]

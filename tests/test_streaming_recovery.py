@@ -28,7 +28,6 @@ import pytest
 # slow tier (r16): multi-run crash/resume integration (~1 min each); excluded from the default run (pytest.ini)
 pytestmark = pytest.mark.slow
 
-import pytest
 from pyspark.errors import StreamingQueryException
 
 from distributed_query_engine_spark.streaming import ops

@@ -20,8 +20,6 @@ import pytest
 # slow tier (r16): RocksDB provider integration; excluded from the default run (pytest.ini)
 pytestmark = pytest.mark.slow
 
-import pytest
-
 from distributed_query_engine_spark.registry import all_oracles, all_queries
 from distributed_query_engine_spark.session import (
     _STATE_STORE_PROVIDERS,
