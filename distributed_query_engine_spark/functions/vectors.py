@@ -49,10 +49,3 @@ def cosine_from_ints(dot: Column, na_sq: Column, nb_sq: Column) -> Column:
     return dot.cast("double") / (
         F.sqrt(na_sq.cast("double")) * F.sqrt(nb_sq.cast("double"))
     )
-
-
-def sql_int_vec(expr: str) -> str:
-    """DuckDB twin of :func:`int_vec`."""
-    return (
-        f"list_transform({expr}, x -> CAST(round(CAST(x AS DOUBLE) * {SCALE}) AS BIGINT))"
-    )

@@ -99,11 +99,6 @@ def stride_resample(df: DataFrame, stride: int = 2, limit: int = 64) -> DataFram
 PPM_W, PPM_H = 16, 16
 
 
-def _pixel_formula(doc_id: int, i: int) -> int:
-    """Deterministic synthetic pixel byte: index i in [0, w*h*3)."""
-    return (doc_id * 31 + i * 7) % 256
-
-
 def synthesize_ppm(docs: DataFrame, w: int = PPM_W, h: int = PPM_H) -> DataFrame:
     """(doc_id) → (doc_id, blob): a REAL binary PPM P6 image per doc,
     built in Arrow batches (the write half of the codec)."""

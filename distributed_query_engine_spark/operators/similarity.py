@@ -1101,33 +1101,6 @@ PQ_K_CODES = 32
 PQ_LLOYD_ITERS = 1
 
 
-def _pq_subvecs(
-    df: DataFrame,
-    dim: int,
-    m_sub: int = PQ_M_SUB,
-    keys: "tuple[str, ...]" = ("vec_id",),
-) -> DataFrame:
-    """(*keys, m, sv): the per-subspace slices of ivec. dim must be
-    divisible by m_sub (the caller probes it once — a scalar, like
-    suggest_n_cells' count()). ``keys`` generalizes the id columns —
-    the residual query side slices per (q_id, cell_id)."""
-    sd = dim // m_sub
-    return df.select(
-        *keys,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("ivec", m * sd + 1, sd).alias("sv"),
-                    )
-                    for m in range(m_sub)
-                ]
-            )
-        ).alias("s"),
-    ).select(*keys, "s.m", "s.sv")
-
-
 def _pq_dist(sv_a, sv_b) -> "Column":
     """Exact-integer squared L2 between two fixed-point subvectors:
     ||a||² − 2·a·b + ||b||² (each term a long)."""
@@ -1209,12 +1182,17 @@ def _ivfpq_codes(
 ) -> DataFrame:
     """(vec_id, cell_id, m, code_id): coarse assignment + (optionally
     residual) PQ encoding FUSED into one Arrow kernel pass over the
-    corpus — the relation ``codes ⋈ assigned`` used to build with two
-    mapInPandas stages and a corpus-sized sort-merge join (2 exchanges
-    + 2 sorts); here it is one Python stage and no exchange. Exactness
-    per :func:`_pq_assign`: every distance term is an integer < 2⁵³ in
-    float64, first-argmin over ascending ids reproduces the lowest-id
-    tie-breaks, and the residual subtraction is exact int64."""
+    corpus — one Python stage and no exchange (no corpus-sized
+    ``codes ⋈ assigned`` join).
+
+    EXACT, not approximate (the :func:`_assign_to` proof): comparing
+    ||s−c||² across codes is comparing −2·s·c + ||c||² (the ||s||² term
+    is constant per row), and every term is an INTEGER — fixed-point
+    components < 2²³ keep every product < 2⁴⁶ and every partial sum
+    < 2⁵³, where float64 addition is exact and order-independent.
+    Centroid and code columns are sorted id-ascending, so
+    ``np.argmin``'s first-minimum rule IS the lowest-id tie-break the
+    oracles replay. The residual subtraction is exact int64."""
     import numpy as np
     import pandas as pd
 
@@ -1262,7 +1240,7 @@ def _ivfpq_codes(
     return base.select("vec_id", "ivec").mapInPandas(_encode, schema)
 
 
-def _pq_train_partials_base(
+def _lloyd_partials(
     base: DataFrame,
     dim: int,
     m_sub: int,
@@ -1272,7 +1250,7 @@ def _pq_train_partials_base(
     """One Lloyd step's sufficient statistics straight from the PACKED
     corpus: the kernel assigns each vector's (residual when
     ``cent_rows`` is given) subvectors to their nearest codes — the
-    :func:`_pq_assign` argmin bit-identically — and emits per-(m, code)
+    :func:`_ivfpq_codes` argmin bit-identically — and emits per-(m, code)
     component sums + counts, ≤ m_sub × k_codes rows per task. One
     corpus-scan job, no explode relation, no shuffle; per-task sums
     are exact int64, the caller merges in unbounded Python ints."""
@@ -1343,50 +1321,84 @@ def _lloyd_merge(cb: dict, partial_rows) -> None:
         ]
 
 
-def _pq_codebooks_rows(
-    base: DataFrame,
-    dim: int,
+def _train_ivfpq(
+    narrow: DataFrame,
+    n_cells: int,
     m_sub: int,
     k_codes: int,
     lloyd_iters: int,
-    seeds: list,
-    cent_rows=None,
-) -> list:
-    """Driver-state codebook training over the packed corpus (see
-    :func:`pq_codebooks` — same arithmetic, same seeds, same carry;
-    this variant skips the subvector explode relation and fuses the
-    residual shift into the kernels). ``seeds`` comes from
-    :func:`_pq_seed_rows`. Returns [(m, code_id, c_sv)]."""
-    cb: dict = {(m, c): sv for m, c, sv in seeds}
+    residual: bool,
+) -> "tuple[int, DataFrame, list, list, list]":
+    """Train the IVF-PQ quantizer of the (vec_id, ivec) relation
+    ``narrow`` as driver state — the one trainer behind plain PQ
+    (``n_cells=1``), raw and residual IVF-PQ, and the stored index.
+
+    ONE lowest-K collect (:func:`_collect_low_rows`) serves the dim
+    probe, the centroid seeds (the n_cells lowest ids) and the codebook
+    seeds (the vec_id VALUE window [seed_lo, seed_lo + k_codes)); each
+    Lloyd step is one corpus-scan kernel job
+    (:func:`_lloyd_partials`) merged on the driver
+    (:func:`_lloyd_merge`). Residual mode trains on x − c(x) and seeds
+    from ``seed_lo = n_cells``: the n_cells lowest ids ARE the coarse
+    centroids, so their residuals are all-zero and k_codes identical
+    zero seeds would collapse Lloyd to one effective code. Raw mode
+    seeds from ``seed_lo = 0``.
+
+    Returns ``(dim, base, low_rows, cent_rows, cb_rows)``: ``base`` is
+    the dim-guarded, spread corpus scan (dedup._spread_narrow_scan;
+    the r9 one-split lesson), ``low_rows`` the collected window
+    [(vec_id, ivec)], ``cent_rows`` [(cell_id, c_ivec)] and ``cb_rows``
+    [(m, code_id, c_sv)] the quantizer."""
+    from distributed_query_engine_spark.operators.dedup import (
+        _spread_narrow_scan,
+    )
+
+    seed_lo = n_cells if residual else 0
+    low_rows = _collect_low_rows(narrow, max(n_cells, seed_lo + k_codes))
+    if not low_rows:
+        raise ValueError("PQ: empty corpus — no vectors to index")
+    dim = len(low_rows[0][1])
+    base = _spread_narrow_scan(_dim_guard(narrow, dim, m_sub), key="vec_id")
+    cent_rows = low_rows[:n_cells]
+    shift = cent_rows if residual else None
+    cb: dict = {
+        (m, c): sv
+        for m, c, sv in _pq_seed_rows(
+            low_rows, dim, m_sub, k_codes, seed_lo, shift
+        )
+    }
     for _ in range(lloyd_iters):
         cb_rows = [(m, c, sv) for (m, c), sv in cb.items()]
         _lloyd_merge(
-            cb, _pq_train_partials_base(base, dim, m_sub, cent_rows, cb_rows).collect()
+            cb, _lloyd_partials(base, dim, m_sub, shift, cb_rows).collect()
         )
-    return [(int(m), int(c), sv) for (m, c), sv in sorted(cb.items())]
+    cb_rows = [(int(m), int(c), sv) for (m, c), sv in sorted(cb.items())]
+    return dim, base, low_rows, cent_rows, cb_rows
 
 
 def _panel_probe_qdt(
-    low_map: dict,
-    query_ids: list,
+    panel: dict,
     cent_rows,
     cb_rows,
     dim: int,
     m_sub: int,
     n_probe: int,
     residual: bool,
-):
-    """Driver-side probe sets + ADC distance tables for a query panel
-    whose vectors are collected in ``low_map`` (the lowest-K window of
-    an in-memory build, or the index search's panel lookup) — the
-    panel is request metadata (the bm25 qterms-collect class), and
-    every quantity here is panel × index-knob sized. Pure-Python exact
-    integer arithmetic: ||a−b||² over int components equals the
-    engine's ||a||² − 2ab + ||b||² long expression identically, and
-    sorted() on (p_dist, cell_id) reproduces the probe window's
-    row_number order. Returns (probe_rows, qdt_rows); qdt rows carry
-    cell_id in the residual flavor."""
+) -> list:
+    """Driver-side ADC distance tables for a query panel collected as
+    {q_id: ivec} — the panel is request metadata (the bm25
+    qterms-collect class), and every quantity here is panel ×
+    index-knob sized. Returns (q_id, cell_id, m, code_id, dist) rows:
+    for each of the query's n_probe nearest cells, the table of the
+    query — re-expressed in that cell's frame (q − c) when
+    ``residual`` — against every code. The cell_id column makes the
+    table carry the probe sets too. Pure-Python exact integer
+    arithmetic: ||a−b||² over int components equals the engine's
+    ||a||² − 2ab + ||b||² long expression identically, and sorted() on
+    (p_dist, cell_id) reproduces the oracles' probe row_number
+    order."""
     cents = sorted(cent_rows, key=lambda t: t[0])
+    cmap = dict(cents)
     by_m: dict[int, list] = {}
     for m, c, sv in cb_rows:
         by_m.setdefault(m, []).append((c, sv))
@@ -1395,30 +1407,63 @@ def _panel_probe_qdt(
     def d2(a, b):
         return sum((x - y) * (x - y) for x, y in zip(a, b))
 
-    probe_rows, qdt_rows = [], []
-    for qid in query_ids:
-        qv = low_map[qid]
-        ranked = sorted(
-            ((d2(qv, cv), cid) for cid, cv in cents)
-        )[:n_probe]
+    rows = []
+    for qid in sorted(panel):
+        qv = panel[qid]
+        ranked = sorted((d2(qv, cv), cid) for cid, cv in cents)[:n_probe]
         for _, cid in ranked:
-            probe_rows.append((qid, cid))
-        if residual:
-            cmap = dict(cents)
-            for _, cid in ranked:
-                qres = [x - c for x, c in zip(qv, cmap[cid])]
-                for m, codes in by_m.items():
-                    qsv = qres[m * sd:(m + 1) * sd]
-                    for code, c_sv in codes:
-                        qdt_rows.append(
-                            (qid, cid, m, code, d2(qsv, c_sv))
-                        )
-        else:
+            qc = [x - c for x, c in zip(qv, cmap[cid])] if residual else qv
             for m, codes in by_m.items():
-                qsv = qv[m * sd:(m + 1) * sd]
+                qsv = qc[m * sd:(m + 1) * sd]
                 for code, c_sv in codes:
-                    qdt_rows.append((qid, m, code, d2(qsv, c_sv)))
-    return probe_rows, qdt_rows
+                    rows.append((qid, cid, m, code, d2(qsv, c_sv)))
+    return rows
+
+
+def _adc_topk(
+    spark,
+    codes: DataFrame,
+    panel: dict,
+    cent_rows,
+    cb_rows,
+    dim: int,
+    m_sub: int,
+    n_probe: int,
+    k: "int | None",
+    residual: bool,
+) -> DataFrame:
+    """The one IVF-PQ search: the panel's probe sets and distance
+    tables (:func:`_panel_probe_qdt`) enter the plan as ONE broadcast
+    local relation; ``codes`` (vec_id, m, code_id, cell_id) is
+    restricted to the probed cells by a literal ``cell_id IN (...)``
+    filter — a partition filter on a stored index — and the ADC sum
+    Σ_m dist[m, code_m(v)] partial-aggregates map-side. ``k=None``
+    returns the scored (q_id, vec_id, adc_dist) relation (the
+    recall/re-rank instrumentation path); otherwise the per-query
+    top-k by (adc_dist, vec_id) with its rank."""
+    from distributed_query_engine_spark.catalog import local_relation
+
+    qdt_rows = _panel_probe_qdt(
+        panel, cent_rows, cb_rows, dim, m_sub, n_probe, residual
+    )
+    q_dt = local_relation(
+        spark, qdt_rows, "q_id long, cell_id long, m int, code_id long, dist long"
+    )
+    scored = (
+        codes.filter(F.col("cell_id").isin(sorted({r[1] for r in qdt_rows})))
+        .join(F.broadcast(q_dt), ["cell_id", "m", "code_id"])
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .groupBy("q_id", "vec_id")
+        .agg(F.sum("dist").alias("adc_dist"))
+    )
+    if k is None:
+        return scored
+    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
+    return (
+        scored.withColumn("rn", F.row_number().over(w).cast("long"))
+        .filter(F.col("rn") <= k)
+        .select("q_id", "vec_id", "adc_dist", "rn")
+    )
 
 
 def _pq_cb_mats(cb_rows):
@@ -1437,180 +1482,6 @@ def _pq_cb_mats(cb_rows):
         Cm = np.array([v for _, v in lst], dtype=np.float64)
         mats[m] = (ids, Cm, (Cm * Cm).sum(axis=1))
     return mats
-
-
-def _pq_train_partials(subs: DataFrame, cb_rows) -> DataFrame:
-    """One Lloyd step's sufficient statistics, computed IN the assign
-    kernel: per task, assign every (vec_id, m, sv) row to its nearest
-    code (the :func:`_pq_assign` argmin, bit-identically) and emit the
-    per-(m, code) component sums + counts — ≤ m_sub × k_codes rows per
-    task instead of a corpus-sized assignment relation. Per-task sums
-    are exact int64 (components < 2²³ × task rows); the caller merges
-    tasks in unbounded Python ints. No shuffle at all — the old form
-    exchanged twice (per-(m,code,d) partial agg + the array rebuild)."""
-    import numpy as np
-    import pandas as pd
-
-    mats = _pq_cb_mats(cb_rows)
-    schema = "m int, code_id long, s_sv array<long>, c long"
-
-    def _part(batches):
-        acc: dict = {}
-        for pdf in batches:
-            if pdf.empty or not mats:
-                continue
-            mcol = pdf["m"].to_numpy()
-            svcol = pdf["sv"].to_numpy()
-            for m, (ids, Cm, cn) in mats.items():
-                mask = mcol == m
-                if not mask.any():
-                    continue
-                Si = np.stack(svcol[mask]).astype(np.int64)
-                d = cn[None, :] - 2.0 * (Si.astype(np.float64) @ Cm.T)
-                best = np.argmin(d, axis=1)
-                for bi in np.unique(best):
-                    rmask = best == bi
-                    key = (m, int(ids[bi]))
-                    s = Si[rmask].sum(axis=0)
-                    if key in acc:
-                        acc[key][0] += s
-                        acc[key][1] += int(rmask.sum())
-                    else:
-                        acc[key] = [s, int(rmask.sum())]
-        if acc:
-            yield pd.DataFrame(
-                [
-                    {"m": m, "code_id": c, "s_sv": s.tolist(), "c": n}
-                    for (m, c), (s, n) in acc.items()
-                ]
-            )
-
-    return subs.mapInPandas(_part, schema)
-
-
-def _pq_assign(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """Nearest-code assignment per (vec_id, m): argmin squared-L2 with
-    ties → lowest code_id.
-
-    Execution (r15 optimization round): one Arrow ``mapInPandas`` scan
-    of the subvector relation against the collected codebook matrices —
-    DRIVER-BOUNDED by construction (≤ m_sub × k_codes rows of
-    subvector-length ints; 4 KiB at the default (8, 32) knobs). The
-    prior declarative form (broadcast join + partial-aggregable max_by)
-    was plan-shaped right but paid an interpreted higher-order-function
-    distance per (vector × subspace × code) — |corpus|·M·K · ~10-25 µs,
-    the dominant term of every PQ build (measured: the bench ivfpq
-    line spent ~2 s of its 3.4 s constructing/training codebooks at
-    sf0.1) — plus a |corpus|·M-row exchange for the argmin that the
-    kernel removes outright (guide §2.4/§4.2).
-
-    EXACT, not approximate (the :func:`_assign_to` proof): comparing
-    ||s−c||² across codes is comparing −2·s·c + ||c||² (the ||s||² term
-    is constant per row, and all three terms are INTEGERS — fixed-point
-    components < 2²³ keep every product < 2⁴⁶ and every partial sum
-    < 2⁵³, where float64 addition is exact and order-independent — so
-    dropping it cannot reorder or un-tie anything). Codebook columns
-    are sorted code-ascending, so ``np.argmin``'s first-minimum rule IS
-    the historical (−dist, −code_id) max_by tie-break. Rows whose ``m``
-    has no codebook entry drop, preserving the old inner-join
-    semantics."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    rows = cb.select("m", "code_id", "c_sv").collect()
-    mats = _pq_cb_mats([(r["m"], r["code_id"], r["c_sv"]) for r in rows])
-
-    out_schema = T.StructType(
-        list(subs.schema.fields) + [T.StructField("code_id", T.LongType())]
-    )
-
-    def _code(batches):
-        empty = None
-        for pdf in batches:
-            if empty is None:
-                empty = pdf.iloc[0:0].assign(code_id=pd.Series(dtype="int64"))
-            if pdf.empty or not mats:
-                yield empty
-                continue
-            mcol = pdf["m"].to_numpy()
-            parts = []
-            for m, (ids, Cm, cn) in mats.items():
-                mask = mcol == m
-                if not mask.any():
-                    continue
-                Sm = np.stack(pdf["sv"].to_numpy()[mask]).astype(np.float64)
-                d = cn[None, :] - 2.0 * (Sm @ Cm.T)
-                parts.append(
-                    pdf.loc[mask].assign(code_id=ids[np.argmin(d, axis=1)])
-                )
-            yield pd.concat(parts) if parts else empty
-
-    return subs.mapInPandas(_code, out_schema).select(
-        "vec_id", "m", "sv", "code_id"
-    )
-
-
-def pq_codebooks(
-    subs: DataFrame,
-    k_codes: int = PQ_K_CODES,
-    lloyd_iters: int = PQ_LLOYD_ITERS,
-    seed_lo: int = 0,
-) -> DataFrame:
-    """Per-subspace codebooks (m, code_id, c_sv): seeds = the k_codes
-    lowest-vec_id vectors' subvectors (deterministic, oracle-
-    replayable — the ivf_centroids 'lowest_id' discipline), refined by
-    exact-integer Lloyd steps over squared L2. All M_SUB codebooks
-    train in ONE relation keyed by m — the subspace is a grouping
-    column, so adding subspaces adds rows to broadcast-sized relations,
-    never stages. Empty codes keep their previous centroid (the
-    empty-cell carry from ivf_centroids). ``seed_lo`` offsets the seed
-    id window to [seed_lo, seed_lo + k_codes): the RESIDUAL variant
-    must skip the n_cells lowest ids, whose residuals are all-zero
-    (each IS its own coarse centroid) and would collapse the seed set."""
-    # r15 optimization round: the codebook is DRIVER-BOUNDED by
-    # construction (≤ m_sub × k_codes rows of subvector-length ints —
-    # 4 KiB at the default (8, 32) knobs, ~0.5 MiB at the production
-    # (16, 256)), so the Lloyd loop keeps it as driver state — exactly
-    # the centroid-matrix discipline of the Arrow kernels. Per
-    # iteration ONE corpus-scan job computes assignment + per-code
-    # sufficient statistics inside the kernel (_pq_train_partials);
-    # the mean/carry arithmetic merges the per-task partials in exact
-    # unbounded Python ints. The old per-iteration DAG — broadcast
-    # cb + interpreted HOF argmin + |corpus|·M exchange + two more
-    # shuffles for the means + an anti-join carry that RESCANNED the
-    # corpus + an eager localCheckpoint — measured 1.7-1.9 s of the
-    # 3.4 s bench ivfpq line at sf0.1; this form is two small jobs.
-    # Arithmetic is unchanged bit-for-bit: same argmin (kernel proof),
-    # same sign-aware round-half-away mean, same empty-code carry.
-    spark = subs.sparkSession
-    seed_rows = (
-        subs.filter(
-            (F.col("vec_id") >= seed_lo) & (F.col("vec_id") < seed_lo + k_codes)
-        )
-        .select(
-            "m",
-            (F.col("vec_id") - seed_lo).alias("code_id"),
-            F.col("sv").alias("c_sv"),
-        )
-        .collect()
-    )
-    cb: dict = {
-        (r["m"], r["code_id"]): [int(x) for x in r["c_sv"]] for r in seed_rows
-    }
-    for _ in range(lloyd_iters):
-        cb_rows = [(m, c, sv) for (m, c), sv in cb.items()]
-        _lloyd_merge(cb, _pq_train_partials(subs, cb_rows).collect())
-    return spark.createDataFrame(
-        [(int(m), int(c), sv) for (m, c), sv in sorted(cb.items())],
-        "m int, code_id long, c_sv array<long>",
-    )
-
-
-def pq_encode(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, m, code_id): the compressed corpus — M_SUB small ints
-    per vector, the only per-vector state the ADC scan reads."""
-    return _pq_assign(subs, cb).select("vec_id", "m", "code_id")
 
 
 def _probe_dim_strict(
@@ -1731,53 +1602,16 @@ def topk_l2_pq(
     asymmetric-distance sum Σ_m dtable[m, code_m(v)] — approximate
     (quantization error) but fully deterministic, hence oracle-exact.
 
-    100 TB shape: the scan side is the CODES relation (M_SUB ints per
-    vector — memory-resident at corpus scale, the point of PQ); the
-    distance table is query-local and broadcast; the per-(q, vec) sum
-    partial-aggregates map-side. Raw vectors are touched only at
-    train/encode time (and would be re-ranked from disk for the final
-    top-k in a full IVF-PQ deployment). The raw scan is spread first
-    (dedup._spread_narrow_scan; the r9 one-split lesson): a compact
-    embeddings file arrives in 1-2 splits, which would single-thread
-    the subvector/assignment fan-outs."""
-    from distributed_query_engine_spark.operators.dedup import (
-        _spread_narrow_scan,
-    )
-
-    narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
-        "vec_id", "ivec"
-    )
-    dim, narrow = _probe_dim_strict(narrow, m_sub)
-    base = _spread_narrow_scan(narrow, key="vec_id")
-    subs = _pq_subvecs(base, dim, m_sub)
-    cb = pq_codebooks(subs, k_codes, lloyd_iters)
-    codes = pq_encode(subs, cb)
-    q_dt = (
-        subs.filter(F.col("vec_id").isin(query_ids))
-        .withColumnRenamed("vec_id", "q_id")
-        .withColumnRenamed("sv", "q_sv")
-        .join(F.broadcast(cb), "m")
-        .select(
-            "q_id",
-            "m",
-            "code_id",
-            _pq_dist(F.col("q_sv"), F.col("c_sv")).alias("dist"),
-        )
-    )
-    scored = (
-        codes.join(F.broadcast(q_dt), ["m", "code_id"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("dist").alias("adc_dist"))
-    )
-    if k is None:
-        # recall/cost instrumentation path (the ivf_scored pattern)
-        return scored
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "adc_dist", "rn")
+    Plain PQ IS raw IVF-PQ with one coarse cell probed by every query
+    (every vector is assigned to it), so it runs the same trainer and
+    search as :func:`topk_l2_ivfpq`. 100 TB shape: the scan side is the
+    CODES relation (M_SUB ints per vector — memory-resident at corpus
+    scale, the point of PQ) — all of it, since the single cell is
+    always probed; the distance table is query-local and broadcast;
+    the per-(q, vec) sum partial-aggregates map-side."""
+    return topk_l2_ivfpq(
+        emb, query_ids, k, n_cells=1, n_probe=1, m_sub=m_sub,
+        k_codes=k_codes, lloyd_iters=lloyd_iters,
     )
 
 
@@ -1785,26 +1619,6 @@ _CENTS_SCHEMA = "cell_id long, c_ivec array<long>"
 _CB_SCHEMA = "m int, code_id long, c_sv array<long>"
 # the stored codes layout; cell_id is the partition column
 _CODES_SCHEMA = "vec_id long, m int, code_id long, cell_id long"
-
-
-def _collect_cents_rows(base: DataFrame, n_cells: int) -> list:
-    """The n_cells lowest-vec_id vectors as driver rows
-    [(cell_id, ivec), ...]. True lowest-k seeding (orderBy + limit
-    compiles to TakeOrderedAndProject, never `filter(vec_id <
-    n_cells)`, which under-seeds to an EMPTY quantizer on non-dense
-    ids; identical on the canonical table, so the pinned
-    vec_id<n_cells oracles hold). Collected once (r15 optimization
-    round): the centroid relation is driver-bounded, and the previous
-    lazy form re-ran the corpus top-k for EVERY consumer — the assign
-    kernel, each broadcast join, and the index write each triggered
-    their own scan job."""
-    return [
-        (r["cell_id"], [int(x) for x in r["c_ivec"]])
-        for r in base.orderBy("vec_id")
-        .limit(n_cells)
-        .select(F.col("vec_id").alias("cell_id"), F.col("ivec").alias("c_ivec"))
-        .collect()
-    ]
 
 
 def _load_ivfpq_quantizer(
@@ -1842,6 +1656,7 @@ def topk_l2_ivfpq(
     m_sub: int = PQ_M_SUB,
     k_codes: int = PQ_K_CODES,
     lloyd_iters: int = PQ_LLOYD_ITERS,
+    residual: bool = False,
 ) -> DataFrame:
     """IVF-PQ — the composed production vector-store design (FAISS's
     default at scale): IVF bounds WHICH vectors are scanned (each query
@@ -1851,222 +1666,43 @@ def topk_l2_ivfpq(
     embeddings). Both stages share the lowest-id/Lloyd determinism, so
     the full two-level index + search replays exactly in SQL.
 
-    100 TB shape: centroids and codebooks broadcast; the scan side of
-    search is codes ⋈ cell-assignment — a few ints per vector; the
-    only corpus-sized shuffles are the two partial-aggregated argmin
-    assignments at BUILD time. Search cost = n_probe/n_cells of the
-    codes relation per query. Raw scan spread like topk_l2_pq."""
-    from distributed_query_engine_spark.operators.dedup import (
-        _spread_narrow_scan,
-    )
+    ``residual=True`` encodes x − c(x), the offset from the coarse
+    centroid — what FAISS IndexIVFPQ actually quantizes — with
+    per-(query, probed cell) distance tables on q − c_cell. On
+    structured corpora that is the difference between a working index
+    and a collapsed one: raw-vector codebooks spend their K codes
+    separating the dominant (inter-cluster) variance, leaving nothing
+    to rank the WITHIN-cluster neighbors a top-k query needs (measured
+    on the planted-cluster slice, llm_similarity_pq_recall_clustered:
+    raw IVF-PQ 0.04 recall@5 vs residual's, PLANS.md r11).
 
+    100 TB shape: the quantizer (centroids, codebooks) is trained as
+    driver state (:func:`_train_ivfpq`) and the corpus is encoded in
+    one fused Arrow pass (:func:`_ivfpq_codes`); the search
+    (:func:`_adc_topk`) broadcasts one driver-computed distance table
+    and scans only the probed cells' codes — a few ints per vector,
+    n_probe/n_cells of the codes relation per query. The panel
+    vectors come from the training collect; ids outside that window
+    cost one more collect, and ids absent from ``emb`` yield no
+    rows."""
     narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
         "vec_id", "ivec"
     )
-    spark = narrow.sparkSession
-    # r15 optimization round: the index relations (centroids,
-    # codebooks) are driver-bounded, so they are materialized ONCE as
-    # driver rows + local relations — one lowest-K collect serves the
-    # dim probe, centroid seeds, AND codebook seeds — training runs as
-    # one kernel job per Lloyd step, and assignment + encoding FUSE
-    # into a single Arrow pass (_ivfpq_codes), which also deletes the
-    # corpus-sized codes ⋈ assigned sort-merge join (2 exchanges + 2
-    # sorts). Bench ivfpq at sf0.1: 3.76 s → see OPTIMIZATION_r15.md;
-    # results bit-identical (argmin/tie-break proofs on the kernels).
-    low_rows = _collect_low_rows(narrow, max(n_cells, k_codes))
-    if not low_rows:
-        raise ValueError("PQ: empty corpus — no vectors to index")
-    dim = len(low_rows[0][1])
-    base = _spread_narrow_scan(_dim_guard(narrow, dim, m_sub), key="vec_id")
-    cent_rows = low_rows[:n_cells]
-    cents = spark.createDataFrame(cent_rows, _CENTS_SCHEMA)
-    seeds = _pq_seed_rows(low_rows, dim, m_sub, k_codes, 0)
-    cb_rows = _pq_codebooks_rows(base, dim, m_sub, k_codes, lloyd_iters, seeds)
-    cb = spark.createDataFrame(cb_rows, _CB_SCHEMA)
-    enc = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual=False)
-    low_map = dict(low_rows)
-    if all(qid in low_map for qid in query_ids):
-        # panel vectors already collected → probes + distance tables
-        # are driver-computed local relations (no extra scan branches
-        # or broadcast-build jobs in the search plan)
-        probe_rows, qdt_rows = _panel_probe_qdt(
-            low_map, query_ids, cent_rows, cb_rows, dim, m_sub, n_probe,
-            residual=False,
-        )
-        probes = spark.createDataFrame(probe_rows, "q_id long, cell_id long")
-        q_dt = spark.createDataFrame(
-            qdt_rows, "q_id long, m int, code_id long, dist long"
-        )
-    else:
-        q = base.filter(F.col("vec_id").isin(query_ids)).select(
-            F.col("vec_id").alias("q_id"), F.col("ivec").alias("q_ivec")
-        )
-        pw = Window.partitionBy("q_id").orderBy("p_dist", "cell_id")
-        probes = (
-            q.crossJoin(F.broadcast(cents))
-            .select(
-                "q_id",
-                "cell_id",
-                _pq_dist(F.col("q_ivec"), F.col("c_ivec")).alias("p_dist"),
-            )
-            .withColumn("prn", F.row_number().over(pw))
-            .filter(F.col("prn") <= n_probe)
-            .select("q_id", "cell_id")
-        )
-        q_dt = (
-            _pq_subvecs(base.filter(F.col("vec_id").isin(query_ids)), dim, m_sub)
-            .withColumnRenamed("vec_id", "q_id")
-            .withColumnRenamed("sv", "q_sv")
-            .join(F.broadcast(cb), "m")
-            .select(
-                "q_id",
-                "m",
-                "code_id",
-                _pq_dist(F.col("q_sv"), F.col("c_sv")).alias("dist"),
-            )
-        )
-    scored = (
-        enc.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(q_dt), ["q_id", "m", "code_id"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("dist").alias("adc_dist"))
+    dim, base, low_rows, cent_rows, cb_rows = _train_ivfpq(
+        narrow, n_cells, m_sub, k_codes, lloyd_iters, residual
     )
-    if k is None:
-        # recall/cost instrumentation path (the ivf_scored pattern)
-        return scored
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "adc_dist", "rn")
-    )
-
-
-def topk_l2_ivfpq_residual(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int | None = 5,
-    n_cells: int = N_CELLS,
-    n_probe: int = N_PROBE,
-    m_sub: int = PQ_M_SUB,
-    k_codes: int = PQ_K_CODES,
-    lloyd_iters: int = PQ_LLOYD_ITERS,
-) -> DataFrame:
-    """IVF-PQ with RESIDUAL encoding — what FAISS IndexIVFPQ actually
-    quantizes: each vector's code is trained/assigned on x − c(x) (its
-    offset from the coarse centroid), not on x itself. On structured
-    corpora this is the difference between a working index and a
-    collapsed one: raw-vector codebooks spend their K codes separating
-    the corpus's dominant (inter-cluster) variance, leaving nothing to
-    rank the WITHIN-cluster neighbors a top-k query actually needs —
-    measured on the planted-cluster slice (llm_similarity_pq_recall_
-    clustered: raw IVF-PQ 0.04 recall@5 vs residual's, PLANS.md r11).
-    The ADC table becomes per-(query, probed cell): dist[m, code] =
-    ||(q − c_cell)[m] − codebook[m, code]||² — still |q|·n_probe·M·K
-    tiny broadcast rows.
-
-    100 TB shape: identical to :func:`topk_l2_ivfpq` — centroids,
-    codebooks, probe sets, and distance tables broadcast; the search
-    scan is codes ⋈ assignment (a few ints per vector); the only
-    corpus-sized shuffles are the build-time argmin assignments. The
-    residual subtraction is one row-local zip_with at encode time."""
-    from distributed_query_engine_spark.operators.dedup import (
-        _spread_narrow_scan,
-    )
-
-    narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
-        "vec_id", "ivec"
-    )
-    spark = narrow.sparkSession
-    # r15 optimization round: driver-bounded index relations from ONE
-    # lowest-K collect (dim probe + centroid seeds + codebook seeds),
-    # training one kernel job per Lloyd step, assignment + residual
-    # shift + encoding fused into _ivfpq_codes (see topk_l2_ivfpq).
-    # Seeds skip [0, n_cells): those ids ARE the coarse centroids, so
-    # their residuals are all-zero — k_codes identical zero seeds
-    # would collapse Lloyd to one effective code.
-    low_rows = _collect_low_rows(narrow, n_cells + k_codes)
-    if not low_rows:
-        raise ValueError("PQ: empty corpus — no vectors to index")
-    dim = len(low_rows[0][1])
-    base = _spread_narrow_scan(_dim_guard(narrow, dim, m_sub), key="vec_id")
-    cent_rows = low_rows[:n_cells]
-    cents = spark.createDataFrame(cent_rows, _CENTS_SCHEMA)
-    seeds = _pq_seed_rows(low_rows, dim, m_sub, k_codes, n_cells, cent_rows)
-    cb_rows = _pq_codebooks_rows(
-        base, dim, m_sub, k_codes, lloyd_iters, seeds, cent_rows=cent_rows
-    )
-    cb = spark.createDataFrame(cb_rows, _CB_SCHEMA)
-    enc = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual=True)
-    low_map = dict(low_rows)
-    if all(qid in low_map for qid in query_ids):
-        # panel vectors already collected → probes + per-(query,
-        # probed-cell) residual distance tables are driver-computed
-        # local relations (see topk_l2_ivfpq)
-        probe_rows, qdt_rows = _panel_probe_qdt(
-            low_map, query_ids, cent_rows, cb_rows, dim, m_sub, n_probe,
-            residual=True,
+    wanted = set(query_ids)
+    panel = {vid: v for vid, v in low_rows if vid in wanted}
+    rest = sorted(wanted - set(panel))
+    if rest:
+        panel.update(
+            (r["vec_id"], list(r["ivec"]))
+            for r in narrow.filter(F.col("vec_id").isin(rest)).collect()
         )
-        probes = spark.createDataFrame(probe_rows, "q_id long, cell_id long")
-        q_dt = spark.createDataFrame(
-            qdt_rows, "q_id long, cell_id long, m int, code_id long, dist long"
-        )
-    else:
-        q = base.filter(F.col("vec_id").isin(query_ids)).select(
-            F.col("vec_id").alias("q_id"), F.col("ivec").alias("q_ivec")
-        )
-        pw = Window.partitionBy("q_id").orderBy("p_dist", "cell_id")
-        probes = (
-            q.crossJoin(F.broadcast(cents))
-            .select(
-                "q_id",
-                "cell_id",
-                _pq_dist(F.col("q_ivec"), F.col("c_ivec")).alias("p_dist"),
-            )
-            .withColumn("prn", F.row_number().over(pw))
-            .filter(F.col("prn") <= n_probe)
-            .select("q_id", "cell_id")
-        )
-        # per-(query, probed cell) residual distance table: the query
-        # is re-expressed in each probed cell's frame before the ADC
-        # lookup
-        qres = (
-            probes.join(q, "q_id")
-            .join(F.broadcast(cents), "cell_id")
-            .select(
-                "q_id",
-                "cell_id",
-                F.zip_with("q_ivec", "c_ivec", lambda x, c: x - c).alias("ivec"),
-            )
-        )
-        q_dt = (
-            _pq_subvecs(qres, dim, m_sub, keys=("q_id", "cell_id"))
-            .withColumnRenamed("sv", "q_sv")
-            .join(F.broadcast(cb), "m")
-            .select(
-                "q_id",
-                "cell_id",
-                "m",
-                "code_id",
-                _pq_dist(F.col("q_sv"), F.col("c_sv")).alias("dist"),
-            )
-        )
-    scored = (
-        enc.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(q_dt), ["q_id", "cell_id", "m", "code_id"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("dist").alias("adc_dist"))
-    )
-    if k is None:
-        # recall/cost instrumentation path (the ivf_scored pattern)
-        return scored
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "adc_dist", "rn")
+    codes = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual)
+    return _adc_topk(
+        narrow.sparkSession, codes, panel, cent_rows, cb_rows, dim, m_sub,
+        n_probe, k, residual,
     )
 
 
@@ -2089,33 +1725,20 @@ def build_ivfpq_index(
     reads n_probe/n_cells of it. Raw vectors are touched only here
     (train/encode) and in an optional re-rank. Returns the probed
     vector dimensionality (stored implicitly by the codebooks)."""
-    from distributed_query_engine_spark.operators.dedup import (
-        _spread_narrow_scan,
-    )
-
     narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
         "vec_id", "ivec"
     )
     spark = narrow.sparkSession
-    # r15 optimization round: same fused-kernel build as
-    # topk_l2_ivfpq_residual — the codes relation comes out of ONE
-    # Arrow pass carrying cell_id already (no corpus-sized
-    # codes ⋈ assigned join before the write).
-    low_rows = _collect_low_rows(narrow, n_cells + k_codes)
-    if not low_rows:
-        raise ValueError("PQ: empty corpus — no vectors to index")
-    dim = len(low_rows[0][1])
-    base = _spread_narrow_scan(_dim_guard(narrow, dim, m_sub), key="vec_id")
-    cent_rows = low_rows[:n_cells]
-    cents = spark.createDataFrame(cent_rows, _CENTS_SCHEMA)
-    seeds = _pq_seed_rows(low_rows, dim, m_sub, k_codes, n_cells, cent_rows)
-    cb_rows = _pq_codebooks_rows(
-        base, dim, m_sub, k_codes, lloyd_iters, seeds, cent_rows=cent_rows
+    dim, base, _, cent_rows, cb_rows = _train_ivfpq(
+        narrow, n_cells, m_sub, k_codes, lloyd_iters, residual=True
     )
-    cb = spark.createDataFrame(cb_rows, _CB_SCHEMA)
     codes = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual=True)
-    cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    cb.write.mode("overwrite").parquet(f"{index_path}/codebooks")
+    spark.createDataFrame(cent_rows, _CENTS_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(f"{index_path}/centroids")
+    spark.createDataFrame(cb_rows, _CB_SCHEMA).write.mode("overwrite").parquet(
+        f"{index_path}/codebooks"
+    )
     codes.select("vec_id", "m", "code_id", "cell_id").write.mode(
         "overwrite"
     ).partitionBy("cell_id").parquet(f"{index_path}/codes")
@@ -2161,23 +1784,20 @@ def topk_l2_ivfpq_index(
     m_sub: int = PQ_M_SUB,
 ) -> DataFrame:
     """Search a :func:`build_ivfpq_index` artifact — identical results
-    to :func:`topk_l2_ivfpq_residual` for the same corpus and knobs
-    (the index stores exactly the relations that function derives).
+    to ``topk_l2_ivfpq(..., residual=True)`` for the same corpus and
+    knobs (the index stores exactly the quantizer and codes that
+    function derives, and both run :func:`_adc_topk`).
 
     The index metadata work runs on the driver, so Spark runs only the
     pruned scan and the ranking: the panel vectors (one
     point-lookup-shaped read of the embeddings relation), the centroids
-    and the codebooks are collected; the shape checks, the probe sets
-    and the per-(query, probed cell) residual distance tables are
-    computed in exact integer Python (:func:`_panel_probe_qdt`) and
-    enter the plan as ONE broadcast local relation. The codes scan is
-    restricted to the probed cells by a literal ``cell_id IN (...)``
-    partition filter — request metadata, like the bm25 ``tok IN`` — so
-    at 100 TB a search reads n_probe/n_cells of a few-ints-per-vector
-    relation and nothing else. Query ids absent from ``emb`` yield no
-    rows."""
-    from distributed_query_engine_spark.catalog import local_relation
-
+    and the codebooks are collected and shape-checked; the probe sets
+    and the per-(query, probed cell) residual distance tables enter the
+    plan as ONE broadcast local relation. The codes scan is restricted
+    to the probed cells by a literal ``cell_id IN (...)`` partition
+    filter — request metadata, like the bm25 ``tok IN`` — so at 100 TB
+    a search reads n_probe/n_cells of a few-ints-per-vector relation
+    and nothing else. Query ids absent from ``emb`` yield no rows."""
     panel = {
         r["vec_id"]: list(r["ivec"])
         for r in with_int_vec(emb)
@@ -2189,31 +1809,10 @@ def topk_l2_ivfpq_index(
     cent_rows, cb_rows = _load_ivfpq_quantizer(
         spark, index_path, m_sub, dim, "query panel"
     )
-    probe_rows, qdt_rows = _panel_probe_qdt(
-        panel, sorted(panel), cent_rows, cb_rows, dim, m_sub, n_probe,
+    codes = spark.read.schema(_CODES_SCHEMA).parquet(f"{index_path}/codes")
+    return _adc_topk(
+        spark, codes, panel, cent_rows, cb_rows, dim, m_sub, n_probe, k,
         residual=True,
-    )
-    # the residual distance table carries cell_id, so it also carries
-    # the probe sets: one join replaces codes ⋈ probes ⋈ q_dt
-    q_dt = local_relation(
-        spark, qdt_rows, "q_id long, cell_id long, m int, code_id long, dist long"
-    )
-    codes = (
-        spark.read.schema(_CODES_SCHEMA)
-        .parquet(f"{index_path}/codes")
-        .filter(F.col("cell_id").isin(sorted({c for _, c in probe_rows})))
-    )
-    scored = (
-        codes.join(F.broadcast(q_dt), ["cell_id", "m", "code_id"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("dist").alias("adc_dist"))
-    )
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "adc_dist", "rn")
     )
 
 
@@ -2244,22 +1843,22 @@ def topk_l2_ivfpq_rerank(
     rows regardless of corpus size.
 
     100 TB shape: stage 1 is :func:`topk_l2_ivfpq`'s scored relation
-    (broadcast index relations, codes-only scan); stage 2 broadcasts
-    the tiny shortlist onto one more base scan (at scale: point reads
-    of c rows from the vector store) and re-ranks within a
-    |queries| × c relation. Deterministic end to end.
+    (one broadcast distance table, probed-cells codes-only scan);
+    stage 2 broadcasts the tiny shortlist onto one more base scan (at
+    scale: point reads of c rows from the vector store) and re-ranks
+    within a |queries| × c relation. Deterministic end to end.
 
     ``residual=True`` takes the shortlist from the RESIDUAL-encoded ADC
-    scan (:func:`topk_l2_ivfpq_residual`) instead — the complete FAISS
-    IndexIVFPQ default (coarse cells + residual codes + exact re-rank);
-    the re-rank stage itself is encoding-agnostic."""
+    scan (``topk_l2_ivfpq(..., residual=True)``) instead — the complete
+    FAISS IndexIVFPQ default (coarse cells + residual codes + exact
+    re-rank); the re-rank stage itself is encoding-agnostic."""
     from distributed_query_engine_spark.operators.dedup import (
         _spread_narrow_scan,
     )
 
-    adc = topk_l2_ivfpq_residual if residual else topk_l2_ivfpq
-    scored = adc(
-        emb, query_ids, None, n_cells, n_probe, m_sub, k_codes, lloyd_iters
+    scored = topk_l2_ivfpq(
+        emb, query_ids, None, n_cells, n_probe, m_sub, k_codes, lloyd_iters,
+        residual,
     )
     ws = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
     shortlist = (

@@ -96,13 +96,13 @@ def _pq_ctes(ids_sql: str = "0,1,2,3,4") -> list[str]:
     ]
 
 
-def _pq_oracle() -> str:
+def _pq_oracle(ids_sql: str = "0,1,2,3,4") -> str:
     """DuckDB replay of the full PQ pipeline — codebook training
     (lowest-id seeds + one exact-integer Lloyd step per subspace),
     corpus encoding, per-query distance tables, and the ADC sum — the
     llm_kmeans data-dependent-oracle discipline extended with the
-    subspace as a grouping column."""
-    joined = ",\n    ".join(_pq_ctes())
+    subspace as a grouping column. ``ids_sql`` is the query panel."""
+    joined = ",\n    ".join(_pq_ctes(ids_sql))
     return f"""
     WITH {_IVEC_CTE},
     {joined},
@@ -156,12 +156,12 @@ def _ivfpq_ctes(ids_sql: str = "0,1,2,3,4") -> list[str]:
     ]
 
 
-def _ivfpq_oracle() -> str:
+def _ivfpq_oracle(ids_sql: str = "0,1,2,3,4") -> str:
     """IVF-PQ replay: the shared PQ CTE chain plus the integer-L2
     coarse quantizer (lowest-id cells, argmin assignment, per-query
     n_probe probe set) — the ADC scan is then confined to probed
-    cells' codes."""
-    joined = ",\n    ".join(_pq_ctes() + _ivfpq_ctes())
+    cells' codes. ``ids_sql`` is the query panel."""
+    joined = ",\n    ".join(_pq_ctes(ids_sql) + _ivfpq_ctes(ids_sql))
     return f"""
     WITH {_IVEC_CTE},
     {joined}
@@ -269,10 +269,11 @@ def _ivfpq_residual_ctes(
     ]
 
 
-def _ivfpq_residual_oracle() -> str:
+def _ivfpq_residual_oracle(ids_sql: str = "0,1,2,3,4") -> str:
     """Residual IVF-PQ replay: coarse quantizer + residual codebook
-    train/encode + per-(query, cell) distance tables, top-5 by ADC."""
-    joined = ",\n    ".join(_ivfpq_residual_ctes())
+    train/encode + per-(query, cell) distance tables, top-5 by ADC.
+    ``ids_sql`` is the query panel."""
+    joined = ",\n    ".join(_ivfpq_residual_ctes(ids_sql))
     return f"""
     WITH {_IVEC_CTE},
     {joined}
@@ -716,7 +717,7 @@ def _pq_recall_frame(e):
         )
 
     ivfpq_scored = S.topk_l2_ivfpq(e, ids, k=None)
-    ivfpqr_scored = S.topk_l2_ivfpq_residual(e, ids, k=None)
+    ivfpqr_scored = S.topk_l2_ivfpq(e, ids, k=None, residual=True)
     out = (
         rows_for(S.topk_l2_pq(e, ids, k=None), "pq")
         .unionByName(rows_for(ivfpq_scored, "ivfpq"))
@@ -813,8 +814,8 @@ def llm_similarity_ivfpq(spark, sf_dir):
 @query("llm_similarity_ivfpq_residual", oracle=_ivfpq_residual_oracle)
 def llm_similarity_ivfpq_residual(spark, sf_dir):
     """IVF-PQ with RESIDUAL encoding — FAISS IndexIVFPQ's actual
-    quantization target (operators/similarity.py::topk_l2_ivfpq_
-    residual): codes are trained and assigned on x − c(x), the offset
+    quantization target (operators/similarity.py::topk_l2_ivfpq with
+    residual=True): codes are trained and assigned on x − c(x), the offset
     from the coarse centroid, with per-(query, probed-cell) distance
     tables. This is not a refinement, it is the difference between a
     working compressed index and a collapsed one on structured data:
@@ -828,7 +829,7 @@ def llm_similarity_ivfpq_residual(spark, sf_dir):
     two-level residual index. Same 100 TB shape as llm_similarity_ivfpq:
     broadcast index relations, codes-only search scan."""
     e = Tables(spark, sf_dir).embeddings
-    return S.topk_l2_ivfpq_residual(e, _QUERY_IDS, k=5)
+    return S.topk_l2_ivfpq(e, _QUERY_IDS, k=5, residual=True)
 
 
 @query("llm_similarity_ivfpq_index", oracle=_ivfpq_residual_oracle)
@@ -845,8 +846,9 @@ def llm_similarity_ivfpq_index(spark, sf_dir):
     search reads n_probe/n_cells of the compressed index and nothing
     else; raw vectors are touched only at build (and in the optional
     re-rank stage). Results are bit-identical to the in-memory
-    residual search (the index stores exactly the relations
-    topk_l2_ivfpq_residual derives), so it shares that oracle. The
+    residual search: the build trains with the same trainer and the
+    search runs the same driver-side ADC search as
+    topk_l2_ivfpq(residual=True), so it shares that oracle. The
     index dir is content-addressed + atomically published
     (:func:`_content_addressed_index`): regenerated testdata changes
     the fingerprint (never a stale serve), a concurrent reader never

@@ -331,6 +331,21 @@ _CHANGED: dict[str, int] = {
     # repr-exact at sf0.01; TWS==GWS==batch pinned in
     # tests/test_streaming_tws.py.
     "stream_stateful_tws": 15,
+    # r17: plain PQ, raw and residual IVF-PQ and the stored index share
+    # one trainer (_train_ivfpq) and one driver-side ADC search
+    # (_adc_topk); the Spark-side probe fallbacks are gone.
+    # VALUE-PRESERVING (re-verified repr-exact at sf0.01), stamped per
+    # the operator-change precedent: every PQ-family query re-fronts.
+    "llm_similarity_pq": 17,
+    "llm_similarity_ivfpq": 17,
+    "llm_similarity_ivfpq_residual": 17,
+    "llm_similarity_ivfpq_rerank": 17,
+    "llm_similarity_ivfpq_residual_rerank": 17,
+    "llm_similarity_ivfpq_prod": 17,
+    "llm_similarity_pq_recall": 17,
+    "llm_similarity_pq_recall_clustered": 17,
+    "llm_similarity_ivfpq_index": 17,
+    "llm_similarity_ivfpq_incremental": 17,
 }
 
 # Checked first within the unverified group (ordering hint only — a

@@ -47,12 +47,6 @@ def prof_ivfpq():
     dim, narrow = S._probe_dim_strict(narrow, S.PQ_M_SUB)
     base = _spread_narrow_scan(narrow, key="vec_id")
     t("ivfpq/base scan+spread", base)
-    subs = S._pq_subvecs(base, dim, S.PQ_M_SUB)
-    t("ivfpq/subvecs (cum)", subs)
-    cb = S.pq_codebooks(subs, S.PQ_K_CODES, S.PQ_LLOYD_ITERS)
-    t("ivfpq/codebooks train (cum)", cb)
-    codes = S.pq_encode(subs, cb)
-    t("ivfpq/encode (cum, after cb ckpt)", codes)
     full = S.topk_l2_ivfpq(e, _QUERY_IDS, k=5)
     t("ivfpq/FULL", full)
 

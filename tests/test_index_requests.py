@@ -4,7 +4,10 @@ query-term stats, corpus scalars) and the query panel, does its shape
 checks, probing and stats merging on the driver, and leaves Spark only
 the pruned scan and the ranking. These tests pin the results against
 the in-memory search, and the Spark work per request: no
-schema-inference job, and a bounded job count."""
+schema-inference job, and a bounded job count. The in-memory searches
+(plain PQ, raw and residual IVF-PQ) run the same driver-side search and
+are pinned against their DuckDB oracles, including panels whose ids
+fall outside the training collect."""
 
 from __future__ import annotations
 
@@ -16,8 +19,11 @@ from pyspark.sql import functions as F
 from distributed_query_engine_spark.catalog import Tables
 from distributed_query_engine_spark.operators import similarity as S
 from distributed_query_engine_spark.operators import sparse as SP
+from distributed_query_engine_spark.plans.llm import vector as V
+from distributed_query_engine_spark.plans.llm._shared import _QUERY_IDS
 
 from .conftest import partition_filter_values
+from .oracle_diff import assert_same_result
 
 # Jobs per collected search at the unit SF, measured on this code and
 # pinned. IVF-PQ: the panel, centroid and codebook collects, then the
@@ -31,6 +37,10 @@ IVFPQ_SEARCH_JOBS = 7
 BM25_SEARCH_JOBS = 6
 
 ABSENT_ID = 10**9
+# Panel ids beyond the training collect's lowest-K window (32 rows raw,
+# 64 residual at the default knobs), so their vectors take the extra
+# panel collect.
+OUT_OF_WINDOW = [0, 3, 100, 250, 499]
 
 
 def _jobs_and_stages(spark, fn):
@@ -71,7 +81,9 @@ def test_ivfpq_index_rows_equal_residual_search(spark, ivfpq_index, panel):
     got = sorted(
         map(tuple, S.topk_l2_ivfpq_index(spark, index, e, panel, k=5).collect())
     )
-    want = sorted(map(tuple, S.topk_l2_ivfpq_residual(e, panel, k=5).collect()))
+    want = sorted(
+        map(tuple, S.topk_l2_ivfpq(e, panel, k=5, residual=True).collect())
+    )
     assert got == want
     present = [q for q in panel if q != ABSENT_ID]
     assert {r[0] for r in got} == set(present)
@@ -108,3 +120,26 @@ def test_bm25_index_search_jobs(spark, sf_dir):
     assert {r["q_id"] for r in rows} == set(panel)
     assert not [s for s in stages if s.startswith("parquet at ")], stages
     assert jobs <= BM25_SEARCH_JOBS, stages
+
+
+@pytest.mark.parametrize(
+    "panel", [_QUERY_IDS, OUT_OF_WINDOW], ids=["default", "out_of_window"]
+)
+@pytest.mark.parametrize(
+    "search, oracle",
+    [
+        (lambda e, p: S.topk_l2_pq(e, p, k=5), V._pq_oracle),
+        (lambda e, p: S.topk_l2_ivfpq(e, p, k=5), V._ivfpq_oracle),
+        (
+            lambda e, p: S.topk_l2_ivfpq(e, p, k=5, residual=True),
+            V._ivfpq_residual_oracle,
+        ),
+    ],
+    ids=["pq", "ivfpq", "ivfpq_residual"],
+)
+def test_in_memory_pq_search_matches_oracle(
+    spark, duck, sf_dir, search, oracle, panel
+):
+    want = duck.sql(oracle(",".join(map(str, panel))))
+    assert_same_result(search(Tables(spark, sf_dir).embeddings, panel), want)
+    assert len(want.fetchall()) == 5 * len(panel)

@@ -204,18 +204,50 @@ def test_pq_adc_scan_broadcasts_tables_and_partial_aggregates(spark, sf_dir):
     assert overlap >= 5, (overlap, sorted(got), sorted(exact))
 
 
+def _broadcast_build_sides(df) -> list:
+    """For every BroadcastHashJoin in ``df``'s physical plan (before
+    exchange insertion), the class names of all nodes under its build
+    side."""
+
+    def subtree(node):
+        names = [node.getClass().getSimpleName()]
+        kids = node.children()
+        for i in range(kids.size()):
+            names += subtree(kids.apply(i))
+        return names
+
+    def joins(node):
+        found = []
+        if node.getClass().getSimpleName() == "BroadcastHashJoinExec":
+            build = (
+                node.right()
+                if node.buildSide().toString() == "BuildRight"
+                else node.left()
+            )
+            found.append(subtree(build))
+        kids = node.children()
+        for i in range(kids.size()):
+            found += joins(kids.apply(i))
+        return found
+
+    return joins(df._jdf.queryExecution().sparkPlan())
+
+
 def test_ivfpq_search_scans_codes_with_broadcast_index(spark, sf_dir):
-    # IVF-PQ (llm_similarity_ivfpq): every index relation (centroids,
-    # codebooks, probe sets, distance tables) must broadcast onto the
-    # codes/assignment scan side; the ADC sum partial-aggregates; no
-    # shuffled Cartesian, no Python in the pipeline. Quality: the
-    # probed-cells ADC top-k must agree with plain PQ on most hits for
-    # queries whose neighbors sit in probed cells — asserted weakly as
-    # non-empty per-query results (5 queries x 5).
+    # IVF-PQ (llm_similarity_ivfpq): the probe sets and distance tables
+    # are computed on the driver and enter the plan as ONE local
+    # relation, broadcast onto the codes scan — exactly one broadcast
+    # join, with only that local table on its build side; the ADC sum
+    # partial-aggregates; no shuffled join, no Cartesian, no Python UDF
+    # in the pipeline. Every query gets a full top-5 (5 queries x 5).
     df = _q("llm_similarity_ivfpq", spark, sf_dir)
+    (build,) = _broadcast_build_sides(df)
+    assert "LocalTableScanExec" in build, build
+    assert not [n for n in build if "Scan" in n and n != "LocalTableScanExec"]
     plan = _plan(df)
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "partial_sum" in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     rows = df.collect()
