@@ -19,6 +19,8 @@ similarity threshold that matters; determinism is worth it.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -49,3 +51,11 @@ def cosine_from_ints(dot: Column, na_sq: Column, nb_sq: Column) -> Column:
     return dot.cast("double") / (
         F.sqrt(na_sq.cast("double")) * F.sqrt(nb_sq.cast("double"))
     )
+
+
+def cosine_py(a: list, na_sq: int, b: list, nb_sq: int) -> float:
+    """:func:`cosine_from_ints` evaluated on the driver, bit for bit:
+    the dot is exact integer math, and the long→double casts, sqrt,
+    product and quotient are the same correctly rounded IEEE ops."""
+    dot = sum(x * y for x, y in zip(a, b))
+    return float(dot) / (math.sqrt(float(na_sq)) * math.sqrt(float(nb_sq)))

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from distributed_query_engine_spark.functions.vectors import (
     cosine_from_ints,
+    cosine_py,
     dot_long,
     int_vec,
     norm_sq_long,
@@ -115,6 +116,54 @@ def with_int_vec(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
+def _narrow(emb: DataFrame) -> DataFrame:
+    """(vec_id, ivec) of the non-empty vectors — the IVF-PQ input."""
+    return with_int_vec(emb).filter(F.size("ivec") > 0).select("vec_id", "ivec")
+
+
+def _vectors(emb: DataFrame, *meta: str) -> DataFrame:
+    """(vec_id, ivec, nsq, *meta): the fixed-point corpus relation."""
+    return with_int_vec(emb).select("vec_id", "ivec", "nsq", *meta)
+
+
+def _panel(df: DataFrame, query_ids: list[int], *cols: str) -> DataFrame:
+    """The query panel of ``df``: its ``query_ids`` rows as ``q_id``
+    plus each of ``cols`` (default ivec, nsq) renamed ``q_<col>``."""
+    return df.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("q_id"),
+        *[F.col(c).alias(f"q_{c}") for c in cols or ("ivec", "nsq")],
+    )
+
+
+def _cosine_scored(
+    pairs: DataFrame, *keep: str, vec: str = "ivec", nsq: str = "nsq"
+) -> DataFrame:
+    """(q_id, vec_id, *keep, cosine) over (query, candidate) pairs that
+    carry ``q_<vec>``/``q_<nsq>`` and ``<vec>``/``<nsq>``; a query is
+    never its own candidate."""
+    return pairs.filter(F.col("vec_id") != F.col("q_id")).select(
+        "q_id",
+        "vec_id",
+        *keep,
+        cosine_from_ints(
+            dot_long(F.col(f"q_{vec}"), F.col(vec)), F.col(f"q_{nsq}"), F.col(nsq)
+        ).alias("cosine"),
+    )
+
+
+def _topk(
+    scored: DataFrame, k: int, by: str = "cosine", desc: bool = True
+) -> DataFrame:
+    """Each query's ``k`` best rows of ``scored`` by ``by`` (highest
+    first when ``desc``), ties to the lower vec_id, ranked 1..k in the
+    long column ``rn``."""
+    key = F.col(by).desc() if desc else F.col(by)
+    w = Window.partitionBy("q_id").orderBy(key, F.col("vec_id"))
+    return scored.withColumn("rn", F.row_number().over(w).cast("long")).filter(
+        F.col("rn") <= k
+    )
+
+
 def lsh_bucket(df: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     """Add an int bucket id: bit j = sign(v · h_j).
 
@@ -147,30 +196,9 @@ def topk_cosine(
 ) -> DataFrame:
     """Exact brute-force cosine top-k for the given query vec_ids.
     Deterministic tiebreak on candidate vec_id."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    q = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    scored = (
-        base.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
+    base = _vectors(emb)
+    return _topk(
+        _cosine_scored(base.crossJoin(F.broadcast(_panel(base, query_ids)))), k
     )
 
 
@@ -195,13 +223,7 @@ def topk_cosine_ann(
     (:func:`suggest_n_planes`; one count() action) — the scale default.
     The registered query pins ``n_planes=N_PLANES`` so the oracle can
     replay the arithmetic."""
-    scored = _lsh_scored(emb, query_ids, n_planes, multiprobe_h)
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+    return _topk(_lsh_scored(emb, query_ids, n_planes, multiprobe_h), k)
 
 
 def _lsh_scored(
@@ -217,39 +239,19 @@ def _lsh_scored(
     if n_planes is None:
         n_planes = suggest_n_planes(emb.count())
     masks = probe_masks(n_planes, multiprobe_h)
-    base = lsh_bucket(
-        with_int_vec(emb).select("vec_id", "ivec", "nsq"), n_planes=n_planes
-    )
-    q = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    probes = q.select(
-        "q_id",
-        "q_ivec",
-        "q_nsq",
-        "q_bucket",
-        F.explode(F.array(*[F.lit(m) for m in masks])).alias("mask"),
-    ).select(
-        "q_id",
-        "q_ivec",
-        "q_nsq",
-        F.col("q_bucket").bitwiseXOR(F.col("mask")).alias("probe_bucket"),
-    )
-    return (
-        base.join(F.broadcast(probes), F.col("bucket") == F.col("probe_bucket"))
-        .filter(F.col("vec_id") != F.col("q_id"))
+    base = lsh_bucket(_vectors(emb), n_planes=n_planes)
+    probes = (
+        _panel(base, query_ids, "ivec", "nsq", "bucket")
+        .withColumn("mask", F.explode(F.array(*[F.lit(m) for m in masks])))
         .select(
             "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
+            "q_ivec",
+            "q_nsq",
+            F.col("q_bucket").bitwiseXOR(F.col("mask")).alias("probe_bucket"),
         )
+    )
+    return _cosine_scored(
+        base.join(F.broadcast(probes), F.col("bucket") == F.col("probe_bucket"))
     )
 
 
@@ -372,7 +374,7 @@ def ivf_centroids(
         F.col("nsq").alias("c_nsq"),
     )
     for _ in range(lloyd_iters):
-        assigned = _assign_to(base, cents)
+        assigned = _assign_to(base, _cent_rows(cents))
         # Exact integer mean, rounded half-away-from-zero:
         # sign(sx) * ((2*|sx| + c) div (2*c)). The earlier F.avg form
         # summed doubles — an ORDER-DEPENDENT float accumulation whose
@@ -411,11 +413,19 @@ def ivf_centroids(
     return cents
 
 
+def _cent_rows(cents: DataFrame) -> list:
+    """A centroid relation collected as driver rows [(cell_id, c_ivec,
+    c_nsq)] in cell_id order — index metadata, n_cells rows."""
+    rows = [tuple(r) for r in cents.select("cell_id", "c_ivec", "c_nsq").collect()]
+    return sorted(rows, key=lambda r: r[0])
+
+
 def _assign_to(
-    base: DataFrame, cents: DataFrame, meta_cols: "tuple[str, ...]" = ()
+    base: DataFrame, cent_rows: list, meta_cols: "tuple[str, ...]" = ()
 ) -> DataFrame:
     """Nearest-centroid assignment (ties → lowest cell id): broadcast
-    centroids, scan the corpus once, per-vector argmax.
+    centroids (:func:`_cent_rows`, cell_id order), scan the corpus
+    once, per-vector argmax.
 
     The argmax is ``max_by`` over the ordering struct (c_cos, -cell_id)
     — identical row choice to the historical row_number window ((cos
@@ -450,11 +460,9 @@ def _assign_to(
     import pandas as pd
     from pyspark.sql import types as T
 
-    crows = cents.select("cell_id", "c_ivec", "c_nsq").collect()
-    crows.sort(key=lambda r: r["cell_id"])
-    cell_ids = np.array([r["cell_id"] for r in crows], dtype=np.int64)
-    C = np.array([r["c_ivec"] for r in crows], dtype=np.float64)
-    cn = np.sqrt(np.array([r["c_nsq"] for r in crows], dtype=np.float64))
+    cell_ids = np.array([c for c, _, _ in cent_rows], dtype=np.int64)
+    C = np.array([v for _, v, _ in cent_rows], dtype=np.float64)
+    cn = np.sqrt(np.array([n for _, _, n in cent_rows], dtype=np.float64))
 
     out_schema = T.StructType(
         list(base.schema.fields) + [T.StructField("cell_id", T.LongType())]
@@ -483,6 +491,39 @@ def _assign_to(
     )
 
 
+def _ivf_index(
+    base: DataFrame,
+    n_cells: int | None,
+    strategy: str = "lowest_id",
+    lloyd_iters: int = 0,
+    meta_cols: "tuple[str, ...]" = (),
+    query_ids: "list[int]" = (),
+) -> "tuple[list, DataFrame, list]":
+    """The in-memory IVF index of ``base`` (vec_id, ivec, nsq,
+    *meta_cols) and a query panel: (:func:`_cent_rows`, collected once
+    and shared by the assignment and the probes; the assignment
+    relation; :func:`_panel_rows` of ``query_ids``). With the pinned
+    lowest_id / no-Lloyd quantizer the centroids ARE the n_cells
+    lowest-id rows, so one collect serves the centroids and every
+    panel id inside that window. ``n_cells=None`` derives the cell
+    count from the corpus size (:func:`suggest_n_cells`; one count()
+    action)."""
+    if n_cells is None:
+        n_cells = suggest_n_cells(base.count())
+    low: list = []
+    if strategy == "lowest_id" and not lloyd_iters:
+        low = [tuple(r) for r in base.orderBy("vec_id").limit(n_cells).collect()]
+        cent_rows = [r[:3] for r in low]
+    else:
+        cent_rows = _cent_rows(
+            ivf_centroids(
+                base.select("vec_id", "ivec", "nsq"), n_cells, strategy, lloyd_iters
+            )
+        )
+    panel = _panel_rows(base, query_ids, *meta_cols, known=low)
+    return cent_rows, _assign_to(base, cent_rows, meta_cols), panel
+
+
 def kmeans_cell_stats(
     emb: DataFrame,
     n_cells: int,
@@ -506,9 +547,9 @@ def kmeans_cell_stats(
     aggregate bounded at n_cells × dim rows post-agg; the stats pass is
     the same assignment scan with a per-cell aggregate. The corpus is
     never collected — only n_cells-row centroid relations checkpoint."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
+    base = _vectors(emb)
     cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
+    assigned = _assign_to(base, _cent_rows(cents))
     member = (
         assigned.join(F.broadcast(cents), "cell_id")
         .select(
@@ -556,31 +597,13 @@ def hard_negatives(
     then one more scan with the tiny query panel broadcast and a
     cell-inequality predicate evaluated scan-side — the corpus never
     shuffles except the per-query top-k window on (q_id)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
-    q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("cell_id").alias("q_cell"),
-    )
-    scored = assigned.join(
-        F.broadcast(q), F.col("cell_id") != F.col("q_cell")
-    ).select(
-        "q_id",
-        "vec_id",
-        cosine_from_ints(
-            dot_long(F.col("q_ivec"), F.col("ivec")),
-            F.col("q_nsq"),
-            F.col("nsq"),
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
+    assigned = _ivf_index(_vectors(emb), n_cells, strategy, lloyd_iters)[1]
+    q = _panel(assigned, query_ids, "ivec", "nsq", "cell_id")
+    return _topk(
+        _cosine_scored(
+            assigned.join(F.broadcast(q), F.col("cell_id") != F.col("q_cell_id"))
+        ),
+        k,
     )
 
 
@@ -601,17 +624,13 @@ def ivf_assign(
     centroids broadcast, the corpus is scanned once, and the only
     shuffle is the per-vector argmax (bounded at |corpus| × n_cells rows
     pre-aggregation)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    return _assign_to(base, cents)
+    return _ivf_index(_vectors(emb), n_cells, strategy, lloyd_iters)[1]
 
 
 def topk_cosine_ivf(
     emb: DataFrame,
     query_ids: list[int],
-    k: int = 5,
+    k: int | None = 5,
     n_probe: int = N_PROBE,
     n_cells: int | None = N_CELLS,
     strategy: str = "lowest_id",
@@ -624,13 +643,13 @@ def topk_cosine_ivf(
     corpus instead of all of it — the knobs a 100 TB deployment turns
     (``n_cells=None`` derives ~sqrt(corpus) via
     :func:`suggest_n_cells`; ``strategy``/``lloyd_iters`` pick and
-    refine the quantizer, :func:`ivf_centroids`)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
-    return _ivf_search(cents, assigned, query_ids, k, n_probe)
+    refine the quantizer, :func:`ivf_centroids`). ``k=None`` returns
+    the scored candidate relation (q_id, vec_id, cosine) for
+    recall/cost instrumentation."""
+    cent_rows, assigned, panel = _ivf_index(
+        _vectors(emb), n_cells, strategy, lloyd_iters, query_ids=query_ids
+    )
+    return _ivf_search(cent_rows, assigned, panel, k, n_probe)
 
 
 def topk_cosine_ivf_filtered(
@@ -651,58 +670,19 @@ def topk_cosine_ivf_filtered(
     than k in-filter candidates in the probed cells → fewer rows for
     that query (approximate by the same contract as the unfiltered
     IVF; a production store widens n_probe on shortfall)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq", "label")
-    cents = ivf_centroids(base.select("vec_id", "ivec", "nsq"), n_cells)
-    assigned = _assign_to(base, cents, meta_cols=("label",))
-    q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("label").alias("q_label"),
+    base = _vectors(emb, "label")
+    cent_rows, assigned, panel = _ivf_index(
+        base, n_cells, meta_cols=("label",), query_ids=query_ids
     )
-    pw = Window.partitionBy("q_id").orderBy(
-        F.col("p_cos").desc(), F.col("cell_id")
+    pairs = _probed(
+        assigned,
+        cent_rows,
+        panel,
+        n_probe,
+        f", q_label {base.schema['label'].dataType.simpleString()}",
     )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id",
-            "cell_id",
-            cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("c_ivec")),
-                F.col("q_nsq"),
-                F.col("c_nsq"),
-            ).alias("p_cos"),
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= n_probe)
-        .select("q_id", "cell_id")
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(q), "q_id")
-        .filter(
-            (F.col("vec_id") != F.col("q_id"))
-            & (F.col("label") == F.col("q_label"))
-        )
-        .select(
-            "q_id",
-            "vec_id",
-            "label",
-            cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "label", "cosine", "rn")
+    return _topk(
+        _cosine_scored(pairs.filter(F.col("label") == F.col("q_label")), "label"), k
     )
 
 
@@ -722,14 +702,15 @@ def topk_cosine_ivf_deleted(
     broadcast anti-join on the probed-cell scan; a background
     compaction would eventually rewrite cells whose tombstone fraction
     crosses a threshold (the append_to_ivf_index twin closes the CRUD
-    triangle: build → append → delete)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    cents = ivf_centroids(base, n_cells)
-    assigned = _assign_to(base, cents)
+    triangle: build → append → delete). Query vectors still resolve
+    from the full corpus."""
+    cent_rows, assigned, panel = _ivf_index(
+        _vectors(emb), n_cells, query_ids=query_ids
+    )
     corpus = assigned.join(
         F.broadcast(tombstones.select("vec_id")), "vec_id", "left_anti"
     )
-    return _ivf_search(cents, assigned, query_ids, k, n_probe, corpus=corpus)
+    return _ivf_search(cent_rows, corpus, panel, k, n_probe)
 
 
 def ivf_compaction_report(
@@ -751,9 +732,7 @@ def ivf_compaction_report(
     the flagged cells' files are rewritten (they are hive partitions
     of the codes/assignments layout); unflagged cells keep paying the
     anti-join at read — the same threshold economics as LSM stores."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    cents = ivf_centroids(base, n_cells)
-    assigned = _assign_to(base, cents)
+    assigned = _ivf_index(_vectors(emb), n_cells)[1]
     flagged = assigned.join(
         F.broadcast(tombstones.select("vec_id").withColumn("_t", F.lit(1))),
         "vec_id",
@@ -778,62 +757,70 @@ def ivf_compaction_report(
     )
 
 
+# A collected cosine query panel, and the IVF probe relation built from
+# it: one row per (probed cell, panel query).
+_PANEL_SCHEMA = "q_id long, q_ivec array<long>, q_nsq long"
+_PROBE_SCHEMA = "cell_id long, " + _PANEL_SCHEMA
+
+
+def _panel_rows(
+    df: DataFrame, query_ids: list[int], *meta: str, known: list = ()
+) -> list:
+    """The query panel of ``df`` as driver rows [(q_id, q_ivec, q_nsq,
+    *meta)] — request-sized. Ids found in ``known`` (rows of ``df``
+    already collected) are taken from there; the rest cost one collect.
+    Ids absent from ``df`` have no row, so they yield no results."""
+    wanted = set(query_ids)
+    rows = [r for r in known if r[0] in wanted]
+    rest = sorted(wanted - {r[0] for r in rows})
+    if rest:
+        rows += [tuple(r) for r in _panel(df, rest, "ivec", "nsq", *meta).collect()]
+    return rows
+
+
+def _probed(
+    corpus: DataFrame, cent_rows: list, panel: list, n_probe: int, q_meta: str = ""
+) -> DataFrame:
+    """``corpus`` (it carries cell_id) restricted to the panel's probed
+    cells and joined to the probe rows — the one probe step of every
+    cosine IVF search. Each panel query probes its ``n_probe`` nearest
+    centroids, ranked on the driver by (p_cos DESC, cell_id) with
+    :func:`cosine_py` (bit-identical to the Spark cosine): centroids
+    and panel are index-metadata-sized and request-sized. The probe
+    rows (cell_id, q_id, q_ivec, q_nsq, *panel meta; ``q_meta`` is the
+    DDL of the meta columns) enter the plan as ONE broadcast local
+    relation, and the corpus is filtered by a literal ``cell_id IN
+    (...)`` — a static partition filter on a stored index."""
+    from distributed_query_engine_spark.catalog import local_relation
+
+    rows = [
+        (cid, *q)
+        for q in panel
+        for _, cid in sorted(
+            (-cosine_py(q[1], q[2], cv, cn), cid) for cid, cv, cn in cent_rows
+        )[:n_probe]
+    ]
+    probes = local_relation(corpus.sparkSession, rows, _PROBE_SCHEMA + q_meta)
+    return corpus.filter(F.col("cell_id").isin(sorted({r[0] for r in rows}))).join(
+        F.broadcast(probes), "cell_id"
+    )
+
+
 def _ivf_search(
-    cents: DataFrame,
-    assigned: DataFrame,
-    query_ids: list[int],
+    cent_rows: list,
+    corpus: DataFrame,
+    panel: list,
     k: int | None,
     n_probe: int,
-    corpus: "DataFrame | None" = None,
 ) -> DataFrame:
-    """The IVF search given its two index relations: probe selection
-    over broadcast centroids, exact ranking within probed cells. Query
-    vectors come from the assignment relation itself (an index lookup),
-    so search needs NOTHING beyond the index. ``corpus`` overrides the
-    SCANNED side only (tombstone-excluded view for the delete
-    lifecycle) while queries still resolve from the full index."""
-    if corpus is None:
-        corpus = assigned
-    q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    pw = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cell_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id",
-            "cell_id",
-            cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("c_ivec")), F.col("q_nsq"), F.col("c_nsq")
-            ).alias("p_cos"),
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= n_probe)
-        .select("q_id", "cell_id")
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(q), "q_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")), F.col("q_nsq"), F.col("nsq")
-            ).alias("cosine"),
-        )
-    )
-    if k is None:
-        # recall/cost instrumentation path: the raw candidate relation
-        return scored
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+    """The one cosine IVF search: :func:`_probed` then exact cosine
+    ranking within the probed cells. ``panel`` is the collected
+    :func:`_panel_rows`; ``corpus`` is the scanned assignment relation
+    (a tombstone-excluded view for the delete lifecycle). ``k=None``
+    returns the scored (q_id, vec_id, cosine) candidate relation for
+    recall/cost instrumentation."""
+    scored = _cosine_scored(_probed(corpus, cent_rows, panel, n_probe))
+    return scored if k is None else _topk(scored, k)
 
 
 def ivf_scored(
@@ -848,12 +835,9 @@ def ivf_scored(
     construction as :func:`topk_cosine_ivf` (knobs forwarded so cost
     measurements can never silently describe a different index than
     the search)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
-    return _ivf_search(cents, assigned, query_ids, None, n_probe)
+    return topk_cosine_ivf(
+        emb, query_ids, None, n_probe, n_cells, strategy, lloyd_iters
+    )
 
 
 def ivf_candidate_counts(
@@ -876,6 +860,46 @@ def ivf_candidate_counts(
     )
 
 
+# Stored cosine IVF index layout (build_ivf_index; the graph index
+# shares it). cell_id is the assignments' partition column.
+_IVF_CENTS_SCHEMA = "cell_id long, c_ivec array<long>, c_nsq long"
+_ASSIGN_SCHEMA = "vec_id long, ivec array<long>, nsq long, cell_id long"
+
+
+def _write_ivf_index(cent_rows: list, assigned: DataFrame, index_path: str) -> None:
+    from distributed_query_engine_spark.catalog import local_relation
+
+    local_relation(assigned.sparkSession, cent_rows, _IVF_CENTS_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(f"{index_path}/centroids")
+    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
+        f"{index_path}/assignments"
+    )
+
+
+def _ivf_cent_rows(spark, index_path: str) -> list:
+    """A stored IVF index's centroids as driver rows (index metadata),
+    read with the declared schema: no schema-inference job."""
+    return _cent_rows(
+        spark.read.schema(_IVF_CENTS_SCHEMA).parquet(f"{index_path}/centroids")
+    )
+
+
+def _ivf_assignments(spark, index_path: str) -> DataFrame:
+    """A stored IVF index's assignment relation, read with the declared
+    schema (cell_id is long as written, so no cast)."""
+    return spark.read.schema(_ASSIGN_SCHEMA).parquet(f"{index_path}/assignments")
+
+
+def _ingest_batch(emb_new: DataFrame, cent_rows: list) -> DataFrame:
+    """An ingest batch's (vec_id, ivec, nsq), guarded against the stored
+    centroids' dim: a vector of any other dim fails the write, naming
+    its vec_id (:func:`_dim_guard`; no extra job)."""
+    if not cent_rows:
+        raise ValueError("IVF index: empty centroids relation")
+    return _dim_guard(_vectors(emb_new), len(cent_rows[0][1]), what=_INDEX_DIM)
+
+
 def build_ivf_index(
     emb: DataFrame,
     index_path: str,
@@ -889,15 +913,8 @@ def build_ivf_index(
     the corpus, PARTITIONED BY cell so a probe reads only its cells'
     files). Built once per corpus version; queries then pay index reads
     only, never a corpus re-embed/re-assign."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
-    cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
-        f"{index_path}/assignments"
-    )
+    cent_rows, assigned, _ = _ivf_index(_vectors(emb), n_cells, strategy, lloyd_iters)
+    _write_ivf_index(cent_rows, assigned, index_path)
 
 
 def append_to_ivf_index(spark, emb_new: DataFrame, index_path: str) -> None:
@@ -907,16 +924,16 @@ def append_to_ivf_index(spark, emb_new: DataFrame, index_path: str) -> None:
     item 4; the ANN analog of the incremental-dedup trilogy). The
     quantizer is NOT retrained: cell geometry is a versioned artifact
     and retraining would invalidate every stored assignment, so ingest
-    is ONE broadcast of the stored centroids against the new batch's
-    scan (the same partial-aggregable argmax as :func:`_assign_to`)
-    plus an append of part-files into the cell-partitioned layout —
-    searches see the new vectors immediately via the same
-    partition-pruned reads, no rebuild, no rewrite of existing files."""
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    base = with_int_vec(emb_new).select("vec_id", "ivec", "nsq")
-    _assign_to(base, cents).write.mode("append").partitionBy(
-        "cell_id"
-    ).parquet(f"{index_path}/assignments")
+    is ONE scan of the new batch against the stored centroids (the
+    same argmax as :func:`_assign_to`) plus an append of part-files
+    into the cell-partitioned layout — searches see the new vectors
+    immediately via the same partition-pruned reads, no rebuild, no
+    rewrite of existing files. A batch vector whose dim differs from
+    the centroids' fails the append, naming its vec_id."""
+    cent_rows = _ivf_cent_rows(spark, index_path)
+    _assign_to(_ingest_batch(emb_new, cent_rows), cent_rows).write.mode(
+        "append"
+    ).partitionBy("cell_id").parquet(f"{index_path}/assignments")
 
 
 def topk_cosine_ivf_index(
@@ -929,17 +946,20 @@ def topk_cosine_ivf_index(
     """IVF ANN search against a :func:`build_ivf_index` artifact —
     identical results to :func:`topk_cosine_ivf` for the same corpus
     and knobs (the index stores exactly the relations that function
-    derives). The assignment relation is partitioned by cell_id, so
-    Spark's partition pruning restricts the scan to probed cells once
-    the probe set is known — at 100 TB that is the difference between
-    reading n_probe/n_cells of the index and reading all of it."""
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    # partition-column type inference narrows small cell ids to int;
-    # restore the long the in-memory relations carry
-    assigned = spark.read.parquet(f"{index_path}/assignments").withColumn(
-        "cell_id", F.col("cell_id").cast("long")
+    derives, and both run :func:`_ivf_search`). The index metadata
+    work runs on the driver: the centroids and the panel vectors (an
+    index lookup on the assignments) are collected and the probes
+    ranked there; Spark runs only the scan of the probed cells, which
+    a literal ``cell_id IN (...)`` partition filter restricts to
+    n_probe/n_cells of the index per query, and the ranking."""
+    assigned = _ivf_assignments(spark, index_path)
+    return _ivf_search(
+        _ivf_cent_rows(spark, index_path),
+        assigned,
+        _panel_rows(assigned, query_ids),
+        k,
+        n_probe,
     )
-    return _ivf_search(cents, assigned, query_ids, k, n_probe)
 
 
 def semdedup(
@@ -1456,14 +1476,7 @@ def _adc_topk(
         .groupBy("q_id", "vec_id")
         .agg(F.sum("dist").alias("adc_dist"))
     )
-    if k is None:
-        return scored
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "adc_dist", "rn")
-    )
+    return scored if k is None else _topk(scored, k, "adc_dist", desc=False)
 
 
 def _pq_cb_mats(cb_rows):
@@ -1506,22 +1519,33 @@ def _probe_dim_strict(
     return dim, _dim_guard(narrow, dim, m_sub, id_col)
 
 
+# The _dim_guard message of the stored cosine indexes (IVF, graph, SQ8).
+_INDEX_DIM = "vector dim does not match the index"
+
+
 def _dim_guard(
-    narrow: DataFrame, dim: int, m_sub: int, id_col: str = "vec_id"
+    narrow: DataFrame,
+    dim,
+    m_sub: int = 1,
+    id_col: str = "vec_id",
+    what: str = "PQ requires homogeneous vector dims",
 ) -> DataFrame:
     """The homogeneity guard of :func:`_probe_dim_strict`, for callers
-    that already know ``dim`` (e.g. from :func:`_collect_low_rows` —
-    saving the one-row probe job)."""
-    if dim % m_sub:
+    that already know ``dim`` — an int (e.g. from
+    :func:`_collect_low_rows` or stored centroids, saving the one-row
+    probe job) or a column (a stored quantizer's size joined onto the
+    rows). A row of any other dim raises ``{what}: expected D, got d
+    ({id_col} X)`` when the relation is evaluated; no extra job."""
+    if m_sub > 1 and dim % m_sub:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    guarded = narrow.withColumn(
+    return narrow.withColumn(
         "ivec",
         F.when(F.size("ivec") == dim, F.col("ivec")).otherwise(
             F.raise_error(
                 F.concat(
-                    F.lit(
-                        f"PQ requires homogeneous vector dims: expected {dim}, got "
-                    ),
+                    F.lit(f"{what}: expected "),
+                    F.lit(dim).cast("string"),
+                    F.lit(", got "),
                     F.size("ivec").cast("string"),
                     F.lit(f" ({id_col} "),
                     F.col(id_col).cast("string"),
@@ -1530,7 +1554,6 @@ def _dim_guard(
             )
         ),
     )
-    return guarded
 
 
 def _panel_dim(panel: dict, m_sub: int) -> int:
@@ -1685,9 +1708,7 @@ def topk_l2_ivfpq(
     vectors come from the training collect; ids outside that window
     cost one more collect, and ids absent from ``emb`` yield no
     rows."""
-    narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
-        "vec_id", "ivec"
-    )
+    narrow = _narrow(emb)
     dim, base, low_rows, cent_rows, cb_rows = _train_ivfpq(
         narrow, n_cells, m_sub, k_codes, lloyd_iters, residual
     )
@@ -1725,9 +1746,7 @@ def build_ivfpq_index(
     reads n_probe/n_cells of it. Raw vectors are touched only here
     (train/encode) and in an optional re-rank. Returns the probed
     vector dimensionality (stored implicitly by the codebooks)."""
-    narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
-        "vec_id", "ivec"
-    )
+    narrow = _narrow(emb)
     spark = narrow.sparkSession
     dim, base, _, cent_rows, cb_rows = _train_ivfpq(
         narrow, n_cells, m_sub, k_codes, lloyd_iters, residual=True
@@ -1761,9 +1780,7 @@ def append_to_ivfpq_index(
     existing files never rewritten, searches see the new codes
     immediately through the same partition-pruned reads. Batch-sized
     work only; the corpus is never rescanned."""
-    narrow = with_int_vec(emb_new).filter(F.size("ivec") > 0).select(
-        "vec_id", "ivec"
-    )
+    narrow = _narrow(emb_new)
     dim, narrow = _probe_dim_strict(narrow, m_sub)
     cent_rows, cb_rows = _load_ivfpq_quantizer(
         spark, index_path, m_sub, dim, "ingest batch"
@@ -1860,34 +1877,18 @@ def topk_l2_ivfpq_rerank(
         emb, query_ids, None, n_cells, n_probe, m_sub, k_codes, lloyd_iters,
         residual,
     )
-    ws = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    shortlist = (
-        scored.withColumn("crn", F.row_number().over(ws))
-        .filter(F.col("crn") <= c)
-        .select("q_id", "vec_id")
-    )
-    base = _spread_narrow_scan(
-        with_int_vec(emb).filter(F.size("ivec") > 0).select("vec_id", "ivec"),
-        key="vec_id",
-    )
-    q = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"), F.col("ivec").alias("q_ivec")
-    )
+    shortlist = _topk(scored, c, "adc_dist", desc=False).select("q_id", "vec_id")
+    base = _spread_narrow_scan(_narrow(emb), key="vec_id")
     reranked = (
         base.join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(q), "q_id")
+        .join(F.broadcast(_panel(base, query_ids, "ivec")), "q_id")
         .select(
             "q_id",
             "vec_id",
             _pq_dist(F.col("q_ivec"), F.col("ivec")).alias("l2_dist"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy("l2_dist", "vec_id")
-    return (
-        reranked.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "l2_dist", "rn")
-    )
+    return _topk(reranked, k, "l2_dist", desc=False)
 
 
 RP_DIMS = 16  # random-projection output dimensionality
@@ -1993,7 +1994,7 @@ def _two_groupings(assigned: DataFrame, n_planes: int) -> DataFrame:
     merged groups once ids reached it; r13 review), negatives are
     reserved for buckets."""
     cell_grouped = assigned.select(
-        "vec_id", F.col("cell_id").cast("long").alias("grp"), "ivec", "nsq"
+        "vec_id", F.col("cell_id").alias("grp"), "ivec", "nsq"
     )
     bucketed = lsh_bucket(assigned, n_planes).select(
         "vec_id",
@@ -2110,61 +2111,39 @@ def _knn_edges(srcs: DataFrame, dsts: DataFrame, g: int) -> DataFrame:
 
 
 def _graph_search(
-    cents: DataFrame,
+    cent_rows: list,
     assigned: DataFrame,
     edges: DataFrame,
-    query_ids: list[int],
+    panel: list,
     k: int | None,
     n_probe: int,
     seeds: int,
 ) -> DataFrame:
-    """The graph-refined search given its three relations (shared by the
-    in-plan and index-reading paths exactly as _ivf_search serves the
-    IVF pair — 'identical results' is structural, not asserted): IVF
-    probe over broadcast centroids -> top-``seeds`` candidates -> one
-    hop over the bounded edge relation -> exact rerank to top-``k``
+    """The graph-refined search given the IVF index (centroid rows and
+    assignment relation), the edge relation and the collected panel
+    (shared by the in-plan and index-reading paths exactly as
+    :func:`_ivf_search` serves the IVF pair — 'identical results' is
+    structural, not asserted): IVF probe -> top-``seeds`` candidates ->
+    one hop over the bounded edge relation -> exact rerank to top-``k``
     (``k=None`` returns the raw rerank candidate relation for
-    cost/recall instrumentation)."""
-    cand = _ivf_search(cents, assigned, query_ids, None, n_probe)
-    sw = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    seed_rel = (
-        cand.withColumn("srn", F.row_number().over(sw))
-        .filter(F.col("srn") <= seeds)
-        .select("q_id", "vec_id")
-    )
+    cost/recall instrumentation). The panel rows serve both the probes
+    and the rerank's broadcast query side."""
+    from distributed_query_engine_spark.catalog import local_relation
+
+    seed_rel = _topk(
+        _ivf_search(cent_rows, assigned, panel, None, n_probe), seeds
+    ).select("q_id", "vec_id")
     expanded = seed_rel.join(
         edges.select("src_id", "dst_id"), seed_rel["vec_id"] == F.col("src_id")
     ).select("q_id", F.col("dst_id").alias("vec_id"))
     allc = seed_rel.unionByName(expanded).distinct()
-    base = assigned.select("vec_id", "ivec", "nsq")
-    q = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    scored = (
-        allc.join(base, "vec_id")
-        .join(F.broadcast(q), "q_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
+    q = local_relation(assigned.sparkSession, panel, _PANEL_SCHEMA)
+    scored = _cosine_scored(
+        allc.join(assigned.select("vec_id", "ivec", "nsq"), "vec_id").join(
+            F.broadcast(q), "q_id"
         )
     )
-    if k is None:
-        # recall/cost instrumentation path: the raw candidate relation
-        return scored
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+    return scored if k is None else _topk(scored, k)
 
 
 def topk_cosine_ivf_graph(
@@ -2195,16 +2174,11 @@ def topk_cosine_ivf_graph(
     to the corpus relation for their vectors (index lookup shape) with
     the query panel broadcast. No stage touches more than
     |seeds|*(1+g) candidates per query after the probe stage."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
-    graph = knn_graph(
-        emb, g=g, n_cells=n_cells, n_planes=n_planes,
-        strategy=strategy, lloyd_iters=lloyd_iters, assigned=assigned,
+    cent_rows, assigned, panel = _ivf_index(
+        _vectors(emb), n_cells, strategy, lloyd_iters, query_ids=query_ids
     )
-    return _graph_search(cents, assigned, graph, query_ids, k, n_probe, seeds)
+    graph = knn_graph(emb, g=g, n_planes=n_planes, assigned=assigned)
+    return _graph_search(cent_rows, assigned, graph, panel, k, n_probe, seeds)
 
 
 def ivf_graph_scored(
@@ -2226,234 +2200,9 @@ def ivf_graph_scored(
     )
 
 
-def build_graph_index(
-    emb: DataFrame,
-    index_path: str,
-    g: int = KNN_G,
-    n_cells: int | None = N_CELLS,
-    n_planes: int = N_PLANES,
-    strategy: str = "lowest_id",
-    lloyd_iters: int = 0,
-) -> None:
-    """Materialize the graph-refinement index — the production artifact
-    for :func:`topk_cosine_ivf_graph`'s search: ``centroids/`` +
-    ``assignments/`` (cell-partitioned, byte-identical layout to
-    :func:`build_ivf_index`) plus ``edges/`` (the bounded-degree
-    (src_id, dst_id) kNN graph, corpus x g rows). The graph build is
-    the expensive stage (two salted within-group self-joins) — exactly
-    what build-once/search-many amortizes; searches then pay index
-    reads only."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    # Materialize the assignment ONCE: it is consumed twice below (the
-    # partitioned write and the edge build), and without the checkpoint
-    # the edge job re-runs the corpus × n_cells argmax from scratch
-    # (measured sf1: ~26 s of silent recompute).
-    assigned = _assign_to(base, cents).localCheckpoint()
-    cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
-        f"{index_path}/assignments"
-    )
-    knn_graph(
-        emb, g=g, n_cells=n_cells, n_planes=n_planes,
-        strategy=strategy, lloyd_iters=lloyd_iters, assigned=assigned,
-    ).select("src_id", "dst_id").write.mode("overwrite").parquet(
-        f"{index_path}/edges"
-    )
-    # Rebuilding into a previously-compacted index_path must repoint the
-    # generation marker, or readers (edges_dir) and append_to_graph_index
-    # keep resolving a stale edges_v<N> from the OLD corpus while the
-    # fresh edges/ is silently ignored (ADVICE r14). Publish 'edges' with
-    # the same tmp+os.replace discipline as compact_graph_index, then GC
-    # the old-corpus generations — centroids/assignments were already
-    # overwritten above, so no reader grace applies to a full rebuild.
-    marker = os.path.join(index_path, "EDGES_CURRENT")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write("edges")
-    os.replace(tmp, marker)
-    import shutil as _sh
-
-    for d in os.listdir(index_path):
-        if d.startswith("edges_v"):
-            _sh.rmtree(os.path.join(index_path, d), ignore_errors=True)
-
-
-def topk_cosine_graph_index(
-    spark,
-    index_path: str,
-    query_ids: list[int],
-    k: int = 5,
-    n_probe: int = N_PROBE,
-    seeds: int = GRAPH_SEEDS,
-) -> DataFrame:
-    """Graph-refined ANN search against a :func:`build_graph_index`
-    artifact — structurally identical results to
-    :func:`topk_cosine_ivf_graph` for the same corpus and knobs: both
-    delegate to :func:`_graph_search`, this one feeding it the three
-    PERSISTED relations. Query vectors resolve from the assignment
-    relation (index lookups); the probe stage partition-prunes the
-    cell-partitioned assignments; nothing touches the embeddings
-    table."""
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    assigned = spark.read.parquet(f"{index_path}/assignments").withColumn(
-        "cell_id", F.col("cell_id").cast("long")
-    )
-    edges = spark.read.parquet(edges_dir(index_path))
-    return _graph_search(cents, assigned, edges, query_ids, k, n_probe, seeds)
-
-
-SQ_LEVELS = 255  # 8-bit scalar quantization: codes in [0, 255]
-
-
-def sq8_quantized(emb: DataFrame) -> DataFrame:
-    """SCALAR QUANTIZATION (SQ8) — the simplest rung of the vector-
-    compression ladder (beside PQ's trained codebooks, matryoshka's
-    prefixes, and the random projection): each DIMENSION is affinely
-    mapped to an 8-bit code against the corpus' per-dimension min/max,
-    q_d = floor((x_d − mn_d)·255 / (mx_d − mn_d)) — 4× smaller than
-    float32 storage with no training step.
-
-    Composition of :func:`sq8_dim_stats` (learn the quantizer) and
-    :func:`sq8_encode` (encode against it; the clamp is the identity on
-    the defining corpus). Exact-arithmetic discipline: everything stays
-    in int64 so the oracle replays bit-identically — u = 255·dequant;
-    overflow bound |ivec| < 2^20 ⇒ 64-dim dot < 2^62 (corpus |x| ≤ 0.58
-    measured). 100 TB shape: the per-dim min/max is ONE map-combined
-    aggregate producing a 1-row broadcast; encode is a row-local zip —
-    no corpus shuffle at all."""
-    return sq8_encode(emb, sq8_dim_stats(emb))
-
-
-def topk_cosine_sq8(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
-    """Brute-force top-k by SQ8-quantized cosine: the storage-compressed
-    twin of topk_cosine (same broadcast-panel scan shape, 4x smaller
-    vectors at rest). Approximate in VALUES (quantization error), exact
-    in ARITHMETIC — fully oracle-replayable."""
-    qz = sq8_quantized(emb)
-    q = qz.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("uvec").alias("q_uvec"),
-        F.col("unsq").alias("q_unsq"),
-    )
-    scored = (
-        qz.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long(F.col("q_uvec"), F.col("uvec")),
-                F.col("q_unsq"),
-                F.col("unsq"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
-
-
-SQ_RERANK_C = 25  # SQ8 shortlist size handed to the exact rerank
-
-
-def topk_cosine_ivf_sq8(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    n_probe: int = N_PROBE,
-    c: int = SQ_RERANK_C,
-    n_cells: int | None = N_CELLS,
-    strategy: str = "lowest_id",
-    lloyd_iters: int = 0,
-) -> DataFrame:
-    """IVF + SQ8 + EXACT RERANK — the training-light production config
-    (FAISS's "IVF,SQ8"): coarse cells prune the scan to n_probe/n_cells
-    of the corpus, the probed candidates are ranked by the 4x-compressed
-    SQ8 representation (what a deployment keeps in memory), and only the
-    per-query shortlist of ``c`` ids re-reads full-precision vectors for
-    the exact final top-k. Compositional twin of topk_l2_ivfpq_rerank
-    with the trained PQ codebooks swapped for the training-free scalar
-    grid — same three-stage plan shape: broadcast probe, pruned
-    compressed scan, id-join rerank."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
-    qz = sq8_quantized(emb).join(
-        assigned.select("vec_id", "cell_id"), "vec_id"
-    )
-    q_full = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    pw = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cell_id"))
-    probes = (
-        q_full.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id",
-            "cell_id",
-            cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("c_ivec")),
-                F.col("q_nsq"),
-                F.col("c_nsq"),
-            ).alias("p_cos"),
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= n_probe)
-        .select("q_id", "cell_id")
-    )
-    qq = qz.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("uvec").alias("q_uvec"),
-        F.col("unsq").alias("q_unsq"),
-    )
-    sq_scored = (
-        qz.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(qq), "q_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long(F.col("q_uvec"), F.col("uvec")),
-                F.col("q_unsq"),
-                F.col("unsq"),
-            ).alias("sq_cos"),
-        )
-    )
-    cw = Window.partitionBy("q_id").orderBy(F.col("sq_cos").desc(), F.col("vec_id"))
-    shortlist = (
-        sq_scored.withColumn("crn", F.row_number().over(cw))
-        .filter(F.col("crn") <= c)
-        .select("q_id", "vec_id")
-    )
-    rer = (
-        shortlist.join(base, "vec_id")
-        .join(F.broadcast(q_full), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        rer.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+# The stored kNN graph (build_graph_index; appends and compaction
+# write the same layout).
+_EDGES_SCHEMA = "src_id long, dst_id long"
 
 
 def edges_dir(index_path: str) -> str:
@@ -2476,6 +2225,90 @@ def edges_dir(index_path: str) -> str:
     return os.path.join(index_path, "edges")
 
 
+def _publish_edges(index_path: str, name: str, keep: str = "") -> None:
+    """Point ``EDGES_CURRENT`` at the edge generation ``name`` with one
+    atomic ``os.replace`` (write the pointer to a tmp file, then rename
+    it over), then delete every other generation (``edges`` and
+    ``edges_v<N>``) except ``keep``, the reader-grace generation."""
+    import shutil
+
+    marker = os.path.join(index_path, "EDGES_CURRENT")
+    tmp = marker + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(name)
+    os.replace(tmp, marker)  # the atomic publish point
+    for d in os.listdir(index_path):
+        if (d == "edges" or d.startswith("edges_v")) and d not in (name, keep):
+            shutil.rmtree(os.path.join(index_path, d), ignore_errors=True)
+
+
+def build_graph_index(
+    emb: DataFrame,
+    index_path: str,
+    g: int = KNN_G,
+    n_cells: int | None = N_CELLS,
+    n_planes: int = N_PLANES,
+    strategy: str = "lowest_id",
+    lloyd_iters: int = 0,
+) -> None:
+    """Materialize the graph-refinement index — the production artifact
+    for :func:`topk_cosine_ivf_graph`'s search: ``centroids/`` +
+    ``assignments/`` (cell-partitioned, byte-identical layout to
+    :func:`build_ivf_index`) plus ``edges/`` (the bounded-degree
+    (src_id, dst_id) kNN graph, corpus x g rows). The graph build is
+    the expensive stage (two salted within-group self-joins) — exactly
+    what build-once/search-many amortizes; searches then pay index
+    reads only."""
+    cent_rows, assigned, _ = _ivf_index(_vectors(emb), n_cells, strategy, lloyd_iters)
+    # Materialize the assignment ONCE: it is consumed twice below (the
+    # partitioned write and the edge build), and without the checkpoint
+    # the edge job re-runs the corpus × n_cells argmax from scratch
+    # (measured sf1: ~26 s of silent recompute).
+    assigned = assigned.localCheckpoint()
+    _write_ivf_index(cent_rows, assigned, index_path)
+    knn_graph(emb, g=g, n_planes=n_planes, assigned=assigned).select(
+        "src_id", "dst_id"
+    ).write.mode("overwrite").parquet(f"{index_path}/edges")
+    # Rebuilding into a previously-compacted index_path must repoint the
+    # generation marker, or readers (edges_dir) and append_to_graph_index
+    # keep resolving a stale edges_v<N> from the OLD corpus while the
+    # fresh edges/ is silently ignored (ADVICE r14). Centroids and
+    # assignments were already overwritten above, so no reader grace
+    # applies to a full rebuild.
+    _publish_edges(index_path, "edges")
+
+
+def topk_cosine_graph_index(
+    spark,
+    index_path: str,
+    query_ids: list[int],
+    k: int = 5,
+    n_probe: int = N_PROBE,
+    seeds: int = GRAPH_SEEDS,
+) -> DataFrame:
+    """Graph-refined ANN search against a :func:`build_graph_index`
+    artifact — structurally identical results to
+    :func:`topk_cosine_ivf_graph` for the same corpus and knobs: both
+    delegate to :func:`_graph_search`, this one feeding it the three
+    PERSISTED relations, read with their declared schemas. The
+    centroids and the panel vectors (an index lookup on the
+    assignments) are collected and the probes ranked on the driver; the
+    probe scan is restricted to the probed cells by a literal
+    ``cell_id IN (...)`` partition filter; nothing touches the
+    embeddings table."""
+    assigned = _ivf_assignments(spark, index_path)
+    edges = spark.read.schema(_EDGES_SCHEMA).parquet(edges_dir(index_path))
+    return _graph_search(
+        _ivf_cent_rows(spark, index_path),
+        assigned,
+        edges,
+        _panel_rows(assigned, query_ids),
+        k,
+        n_probe,
+        seeds,
+    )
+
+
 def append_to_graph_index(
     spark,
     emb_new: DataFrame,
@@ -2486,10 +2319,12 @@ def append_to_graph_index(
     """Ingest a NEW vector batch into an EXISTING graph index WITHOUT a
     rebuild — the graph leg of the incremental-ingest triangle (IVF,
     BM25, now the kNN graph): (1) assign the batch to the STORED
-    centroids (broadcast — the quantizer is never retrained on ingest)
-    and append its part-files into the cell-partitioned assignments;
-    (2) compute edges for the BATCH SOURCES ONLY, against the full
-    (existing ∪ batch) corpus under both groupings, and append them.
+    centroids (the quantizer is never retrained on ingest) and append
+    its part-files into the cell-partitioned assignments; (2) compute
+    edges for the BATCH SOURCES ONLY, against the full (existing ∪
+    batch) corpus under both groupings, and append them. A batch
+    vector whose dim differs from the centroids' fails the ingest,
+    naming its vec_id.
 
     Asymmetry is the documented tradeoff of incremental graph ingest:
     new nodes get full-quality out-edges immediately (they are
@@ -2497,20 +2332,16 @@ def append_to_graph_index(
     them — seeds come from the IVF probe, which sees appended
     assignments at once), while EXISTING nodes' edge lists do not gain
     pointers to the new batch until the next periodic rebuild/compact.
-    Cost: one broadcast-centroid scan of the batch + one
-    batch-vs-corpus bounded group join — never a corpus x corpus
-    rebuild."""
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    batch = with_int_vec(emb_new).select("vec_id", "ivec", "nsq")
+    Cost: one centroid-matrix scan of the batch + one batch-vs-corpus
+    bounded group join — never a corpus x corpus rebuild."""
+    cent_rows = _ivf_cent_rows(spark, index_path)
     # consumed twice (append-write + the batch side of the edge join)
-    b_assigned = _assign_to(batch, cents).localCheckpoint()
+    b_assigned = _assign_to(_ingest_batch(emb_new, cent_rows), cent_rows)
+    b_assigned = b_assigned.localCheckpoint()
     b_assigned.write.mode("append").partitionBy("cell_id").parquet(
         f"{index_path}/assignments"
     )
-    full = spark.read.parquet(f"{index_path}/assignments").withColumn(
-        "cell_id", F.col("cell_id").cast("long")
-    )
-    full_grouped = _two_groupings(full, n_planes)
+    full_grouped = _two_groupings(_ivf_assignments(spark, index_path), n_planes)
     batch_grouped = _two_groupings(b_assigned, n_planes)
     _knn_edges(batch_grouped, full_grouped, g).select(
         "src_id", "dst_id"
@@ -2543,30 +2374,22 @@ def compact_graph_index(
     rmtree+move left a window where ``edges/`` did not exist at all).
     The immediately-previous generation is kept as reader grace; older
     generations are garbage-collected."""
-    full = spark.read.parquet(f"{index_path}/assignments").withColumn(
-        "cell_id", F.col("cell_id").cast("long")
-    )
-    grouped = _two_groupings(full, n_planes)
-    cur = edges_dir(index_path)
-    cur_name = os.path.basename(cur)
+    grouped = _two_groupings(_ivf_assignments(spark, index_path), n_planes)
+    cur_name = os.path.basename(edges_dir(index_path))
     gen = int(cur_name.rsplit("_v", 1)[1]) if "_v" in cur_name else 0
     new_name = f"edges_v{gen + 1}"
     _knn_edges(grouped, grouped, g).select("src_id", "dst_id").write.mode(
         "overwrite"
     ).parquet(os.path.join(index_path, new_name))
-    marker = os.path.join(index_path, "EDGES_CURRENT")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(new_name)
-    os.replace(tmp, marker)  # the atomic publish point
-    import shutil as _sh
+    _publish_edges(index_path, new_name, keep=cur_name)
 
-    for d in os.listdir(index_path):
-        if (d == "edges" or d.startswith("edges_v")) and d not in (
-            new_name,
-            cur_name,
-        ):
-            _sh.rmtree(os.path.join(index_path, d), ignore_errors=True)
+
+SQ_LEVELS = 255  # 8-bit scalar quantization: codes in [0, 255]
+SQ_RERANK_C = 25  # SQ8 shortlist size handed to the exact rerank
+
+# The stored SQ8 index: the 1-row quantizer and the per-vector codes.
+_SQ8_DIMS_SCHEMA = "mn_arr array<long>, mx_arr array<long>"
+_SQ8_CODES_SCHEMA = "vec_id long, codes array<long>"
 
 
 def sq8_dim_stats(emb: DataFrame) -> DataFrame:
@@ -2591,45 +2414,127 @@ def sq8_dim_stats(emb: DataFrame) -> DataFrame:
     )
 
 
+def _sq8_spans() -> "Column":
+    return F.zip_with("mx_arr", "mn_arr", lambda a, b: a - b)
+
+
+def _sq8_decode(z: DataFrame) -> DataFrame:
+    """(vec_id, codes, uvec, unsq) from codes rows carrying the
+    quantizer's ``mn_arr``/``mx_arr``: u = mn·255 + q·span =
+    255·dequant, exact int64 — the one SQ8 decoder, shared by encode
+    and the stored-index read."""
+    u = F.zip_with(
+        "codes",
+        F.arrays_zip("mn_arr", _sq8_spans().alias("span")),
+        lambda q, s: s["mn_arr"] * SQ_LEVELS + q * s["span"],
+    )
+    return z.select("vec_id", "codes", u.alias("uvec")).withColumn(
+        "unsq", dot_long(F.col("uvec"), F.col("uvec"))
+    )
+
+
 def sq8_encode(emb: DataFrame, stats: DataFrame) -> DataFrame:
     """Encode vectors against GIVEN quantizer stats, CLAMPING each value
     to the stored per-dimension range first: the quantizer is a
     versioned artifact — an ingested batch may exceed the ranges the
     corpus defined at build time, and clamping (not re-deriving) is
     what keeps every previously stored code valid. For the defining
-    corpus the clamp is the identity. Returns (vec_id, codes, uvec,
-    unsq) — u = mn*255 + q*span = 255*dequant, exact int64."""
-    base = with_int_vec(emb).select("vec_id", "ivec")
-    z = base.crossJoin(F.broadcast(stats))
-    spans = F.zip_with("mx_arr", "mn_arr", lambda a, b: a - b)
+    corpus the clamp is the identity. A vector whose dim differs from
+    the quantizer's fails, naming its vec_id (:func:`_dim_guard`).
+    Returns (vec_id, codes, uvec, unsq) — see :func:`_sq8_decode`."""
+    z = _dim_guard(
+        with_int_vec(emb).select("vec_id", "ivec").crossJoin(F.broadcast(stats)),
+        F.size("mn_arr"),
+        what=_INDEX_DIM,
+    )
     clamped = F.zip_with(
         "ivec",
         F.arrays_zip("mn_arr", "mx_arr"),
         lambda x, s: F.least(F.greatest(x, s["mn_arr"]), s["mx_arr"]),
     )
-    withc = z.select(
-        "vec_id",
-        "mn_arr",
-        spans.alias("span_arr"),
-        F.zip_with(
-            clamped,
-            F.arrays_zip(
-                "mn_arr",
-                F.zip_with("mx_arr", "mn_arr", lambda a, b: a - b).alias("span"),
-            ),
-            lambda x, s: F.when(
-                s["span"] > 0,
-                F.floor(((x - s["mn_arr"]) * SQ_LEVELS) / s["span"]).cast("long"),
-            ).otherwise(F.lit(0).cast("long")),
-        ).alias("codes"),
+    codes = F.zip_with(
+        clamped,
+        F.arrays_zip("mn_arr", _sq8_spans().alias("span")),
+        lambda x, s: F.when(
+            s["span"] > 0,
+            F.floor(((x - s["mn_arr"]) * SQ_LEVELS) / s["span"]).cast("long"),
+        ).otherwise(F.lit(0).cast("long")),
     )
-    u = F.zip_with(
-        "codes",
-        F.arrays_zip("mn_arr", "span_arr"),
-        lambda q, s: s["mn_arr"] * SQ_LEVELS + q * s["span_arr"],
+    return _sq8_decode(z.select("vec_id", "mn_arr", "mx_arr", codes.alias("codes")))
+
+
+def sq8_quantized(emb: DataFrame) -> DataFrame:
+    """SCALAR QUANTIZATION (SQ8) — the simplest rung of the vector-
+    compression ladder (beside PQ's trained codebooks, matryoshka's
+    prefixes, and the random projection): each DIMENSION is affinely
+    mapped to an 8-bit code against the corpus' per-dimension min/max,
+    q_d = floor((x_d − mn_d)·255 / (mx_d − mn_d)) — 4× smaller than
+    float32 storage with no training step.
+
+    Composition of :func:`sq8_dim_stats` (learn the quantizer) and
+    :func:`sq8_encode` (encode against it; the clamp is the identity on
+    the defining corpus). Exact-arithmetic discipline: everything stays
+    in int64 so the oracle replays bit-identically — u = 255·dequant;
+    overflow bound |ivec| < 2^20 ⇒ 64-dim dot < 2^62 (corpus |x| ≤ 0.58
+    measured). 100 TB shape: the per-dim min/max is ONE map-combined
+    aggregate producing a 1-row broadcast; encode is a row-local zip —
+    no corpus shuffle at all."""
+    return sq8_encode(emb, sq8_dim_stats(emb))
+
+
+def _sq8_topk(qz: DataFrame, query_ids: list[int], k: int) -> DataFrame:
+    """Brute-force top-k by SQ8 cosine over a decoded (vec_id, uvec,
+    unsq) relation, the query panel broadcast."""
+    q = _panel(qz, query_ids, "uvec", "unsq")
+    return _topk(
+        _cosine_scored(qz.crossJoin(F.broadcast(q)), vec="uvec", nsq="unsq"), k
     )
-    out = withc.select("vec_id", "codes", u.alias("uvec"))
-    return out.withColumn("unsq", dot_long(F.col("uvec"), F.col("uvec")))
+
+
+def topk_cosine_sq8(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
+    """Brute-force top-k by SQ8-quantized cosine: the storage-compressed
+    twin of topk_cosine (same broadcast-panel scan shape, 4x smaller
+    vectors at rest). Approximate in VALUES (quantization error), exact
+    in ARITHMETIC — fully oracle-replayable."""
+    return _sq8_topk(sq8_quantized(emb), query_ids, k)
+
+
+def topk_cosine_ivf_sq8(
+    emb: DataFrame,
+    query_ids: list[int],
+    k: int = 5,
+    n_probe: int = N_PROBE,
+    c: int = SQ_RERANK_C,
+    n_cells: int | None = N_CELLS,
+    strategy: str = "lowest_id",
+    lloyd_iters: int = 0,
+) -> DataFrame:
+    """IVF + SQ8 + EXACT RERANK — the training-light production config
+    (FAISS's "IVF,SQ8"): coarse cells prune the scan to n_probe/n_cells
+    of the corpus, the probed candidates are ranked by the 4x-compressed
+    SQ8 representation (what a deployment keeps in memory), and only the
+    per-query shortlist of ``c`` ids re-reads full-precision vectors for
+    the exact final top-k. Compositional twin of topk_l2_ivfpq_rerank
+    with the trained PQ codebooks swapped for the training-free scalar
+    grid — same three-stage plan shape: driver-side probe
+    (:func:`_probed`), pruned compressed scan, id-join rerank."""
+    from distributed_query_engine_spark.catalog import local_relation
+
+    base = _vectors(emb)
+    cent_rows, assigned, panel = _ivf_index(
+        base, n_cells, strategy, lloyd_iters, query_ids=query_ids
+    )
+    qz = sq8_quantized(emb).join(assigned.select("vec_id", "cell_id"), "vec_id")
+    pairs = _probed(qz, cent_rows, panel, n_probe).join(
+        F.broadcast(_panel(qz, query_ids, "uvec", "unsq")), "q_id"
+    )
+    shortlist = _topk(_cosine_scored(pairs, vec="uvec", nsq="unsq"), c).select(
+        "q_id", "vec_id"
+    )
+    q = local_relation(emb.sparkSession, panel, _PANEL_SCHEMA)
+    return _topk(
+        _cosine_scored(shortlist.join(base, "vec_id").join(F.broadcast(q), "q_id")), k
+    )
 
 
 def build_sq8_index(emb: DataFrame, index_path: str) -> None:
@@ -2650,8 +2555,10 @@ def append_to_sq8_index(spark, emb_new: DataFrame, index_path: str) -> None:
     the learned grid edge, the standard SQ ingest behavior) and append
     the codes. Existing codes are never rewritten; re-deriving min/max
     instead would invalidate every stored code — the same
-    versioned-artifact rule as IVF centroids and PQ codebooks."""
-    stats = spark.read.parquet(f"{index_path}/dims")
+    versioned-artifact rule as IVF centroids and PQ codebooks. A batch
+    vector whose dim differs from the stored quantizer's fails the
+    append, naming its vec_id."""
+    stats = spark.read.schema(_SQ8_DIMS_SCHEMA).parquet(f"{index_path}/dims")
     sq8_encode(emb_new, stats).select("vec_id", "codes").write.mode(
         "append"
     ).parquet(f"{index_path}/codes")
@@ -2661,44 +2568,10 @@ def topk_cosine_sq8_index(
     spark, index_path: str, query_ids: list[int], k: int = 5
 ) -> DataFrame:
     """Brute-force SQ8 top-k served entirely FROM the index: codes +
-    the 1-row dims relation reconstruct u row-locally (one broadcast,
-    no shuffle); query vectors are index lookups. Same plan shape as
-    topk_cosine_sq8 reading 4x fewer bytes at rest."""
-    stats = spark.read.parquet(f"{index_path}/dims")
-    codes = spark.read.parquet(f"{index_path}/codes")
-    z = codes.crossJoin(F.broadcast(stats))
-    u = F.zip_with(
-        "codes",
-        F.arrays_zip(
-            "mn_arr",
-            F.zip_with("mx_arr", "mn_arr", lambda a, b: a - b).alias("span"),
-        ),
-        lambda q, s: s["mn_arr"] * SQ_LEVELS + q * s["span"],
-    )
-    qz = z.select("vec_id", u.alias("uvec")).withColumn(
-        "unsq", dot_long(F.col("uvec"), F.col("uvec"))
-    )
-    q = qz.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("uvec").alias("q_uvec"),
-        F.col("unsq").alias("q_unsq"),
-    )
-    scored = (
-        qz.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long(F.col("q_uvec"), F.col("uvec")),
-                F.col("q_unsq"),
-                F.col("unsq"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+    the 1-row dims relation (both read with their declared schemas)
+    reconstruct u row-locally (:func:`_sq8_decode`; one broadcast, no
+    shuffle); query vectors are index lookups. Same scoring as
+    :func:`topk_cosine_sq8` reading 4x fewer bytes at rest."""
+    stats = spark.read.schema(_SQ8_DIMS_SCHEMA).parquet(f"{index_path}/dims")
+    codes = spark.read.schema(_SQ8_CODES_SCHEMA).parquet(f"{index_path}/codes")
+    return _sq8_topk(_sq8_decode(codes.crossJoin(F.broadcast(stats))), query_ids, k)

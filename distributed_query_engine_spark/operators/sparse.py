@@ -349,7 +349,7 @@ def compact_bm25_index(
         .saveAsTable(ctbl)
     )
     (
-        spark.read.parquet(str(base / "stats"))
+        spark.read.schema(_STATS_SCHEMA).parquet(str(base / "stats"))
         .groupBy("tok")
         .agg(F.sum("df").alias("df"))
         .coalesce(1)
@@ -357,7 +357,7 @@ def compact_bm25_index(
         .parquet(str(base / "stats_compact"))
     )
     (
-        spark.read.parquet(str(base / "corpus"))
+        spark.read.schema(_CORPUS_SCHEMA).parquet(str(base / "corpus"))
         .agg(F.sum("n_docs").alias("n_docs"), F.sum("a_tok").alias("a_tok"))
         .coalesce(1)
         .write.mode("overwrite")

@@ -390,9 +390,11 @@ def _content_addressed_index(sf_dir, name: str, knobs: str, build) -> str:
 def llm_similarity_ivf_index(spark, sf_dir):
     """IVF ANN against a PERSISTED index artifact: centroids + corpus
     assignments materialized to parquet (assignments hive-partitioned
-    by cell_id, so probing n_probe cells partition-prunes the scan to
-    those cells' files), then searched without touching the embeddings
-    table at all — query vectors are index lookups too. Identical
+    by cell_id), then searched without touching the embeddings table
+    at all — query vectors are index lookups too. The centroids and
+    panel are collected and the probes ranked on the driver, so the
+    assignments scan carries a literal ``cell_id IN (...)`` partition
+    filter and reads only the probed cells' files. Identical
     results to llm_similarity_ivf; the build-once/search-many split is
     what a 100 TB deployment actually operates
     (operators/similarity.py::build_ivf_index / topk_cosine_ivf_index).

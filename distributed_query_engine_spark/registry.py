@@ -346,6 +346,39 @@ _CHANGED: dict[str, int] = {
     "llm_similarity_pq_recall_clustered": 17,
     "llm_similarity_ivfpq_index": 17,
     "llm_similarity_ivfpq_incremental": 17,
+    # r17: every cosine IVF search (in-memory, filtered, delete, stored
+    # index, graph seeds, IVF+SQ8) runs one driver-side probe
+    # (_probed / _ivf_search); the stored IVF, graph and SQ8 indexes
+    # are read with declared schemas; appends and SQ8 encoding guard
+    # the stored dim; compact_bm25_index reads stats/corpus with
+    # declared schemas. VALUE-PRESERVING (re-verified repr-exact at
+    # sf0.01), stamped per the operator-change precedent. The queries
+    # whose operators only moved onto the shared scoring / panel /
+    # top-k helpers with an unchanged optimized plan (topk, ann_lsh,
+    # projected_recall, hybrid_rrf, kmeans_embeddings, semdedup,
+    # ivf_compact) are not stamped: stamping them too would push the
+    # 7-round-stale cohort out of the ~50-slot window. hard_negatives
+    # is: its join gained the (always true) self-pair predicate.
+    "llm_similarity_ivf": 17,
+    "llm_similarity_filtered": 17,
+    "llm_similarity_ivf_delete": 17,
+    "llm_similarity_ivf_index": 17,
+    "llm_similarity_ivf_incremental": 17,
+    "llm_similarity_recall": 17,
+    "llm_similarity_graph_refine": 17,
+    "llm_similarity_graph_recall": 17,
+    "llm_similarity_graph_index": 17,
+    "llm_similarity_graph_incremental": 17,
+    "llm_similarity_graph_compact": 17,
+    "llm_similarity_graph_prod": 17,
+    "llm_similarity_graph_prod_incremental": 17,
+    "llm_similarity_graph_prod_compact": 17,
+    "llm_similarity_sq8": 17,
+    "llm_similarity_ivf_sq8": 17,
+    "llm_similarity_sq8_incremental": 17,
+    "llm_similarity_sq8_recall": 17,
+    "llm_bm25_index_compact": 17,
+    "llm_hard_negatives": 17,
 }
 
 # Checked first within the unverified group (ordering hint only — a

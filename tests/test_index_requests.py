@@ -1,13 +1,14 @@
-"""Index requests served from driver-side index metadata: an IVF-PQ or
-BM25 search collects the small index relations (centroids, codebooks,
-query-term stats, corpus scalars) and the query panel, does its shape
-checks, probing and stats merging on the driver, and leaves Spark only
-the pruned scan and the ranking. These tests pin the results against
-the in-memory search, and the Spark work per request: no
-schema-inference job, and a bounded job count. The in-memory searches
-(plain PQ, raw and residual IVF-PQ) run the same driver-side search and
-are pinned against their DuckDB oracles, including panels whose ids
-fall outside the training collect."""
+"""Index requests served from driver-side index metadata: an IVF-PQ,
+cosine IVF, graph, SQ8 or BM25 search collects the small index
+relations (centroids, codebooks, query-term stats, corpus scalars) and
+the query panel, does its shape checks, probing and stats merging on
+the driver, and leaves Spark only the pruned scan and the ranking.
+These tests pin the results against the in-memory search, and the
+Spark work per request: no schema-inference job, and a bounded job
+count. The in-memory searches (plain PQ, raw and residual IVF-PQ) run
+the same driver-side search and are pinned against their DuckDB
+oracles, including panels whose ids fall outside the training
+collect."""
 
 from __future__ import annotations
 
@@ -35,6 +36,14 @@ from .oracle_diff import assert_same_result
 # relations).
 IVFPQ_SEARCH_JOBS = 7
 BM25_SEARCH_JOBS = 6
+# Cosine IVF: the centroid and panel collects, then three query jobs
+# (the probe relation's broadcast, the probed-cells scan, the ranking);
+# the Spark-side probe form ran 8. Graph: the same two collects and six
+# query jobs (was 11). SQ8: four query jobs (was 6). None of them runs
+# a schema-inference job any more.
+IVF_SEARCH_JOBS = 5
+GRAPH_SEARCH_JOBS = 8
+SQ8_SEARCH_JOBS = 4
 
 ABSENT_ID = 10**9
 # Panel ids beyond the training collect's lowest-K window (32 rows raw,
@@ -65,6 +74,9 @@ def _jobs_and_stages(spark, fn):
     return out, len(jobs), stages
 
 
+PANELS = [[0, 1, 2], [5, 17, 40, 99, 123], [3, 64, ABSENT_ID]]
+
+
 @pytest.fixture(scope="module")
 def ivfpq_index(spark, sf_dir, tmp_path_factory):
     e = Tables(spark, sf_dir).embeddings
@@ -73,9 +85,7 @@ def ivfpq_index(spark, sf_dir, tmp_path_factory):
     return e, index
 
 
-@pytest.mark.parametrize(
-    "panel", [[0, 1, 2], [5, 17, 40, 99, 123], [3, 64, ABSENT_ID]]
-)
+@pytest.mark.parametrize("panel", PANELS)
 def test_ivfpq_index_rows_equal_residual_search(spark, ivfpq_index, panel):
     e, index = ivfpq_index
     got = sorted(
@@ -100,6 +110,60 @@ def test_ivfpq_index_search_jobs(spark, ivfpq_index):
     assert jobs <= IVFPQ_SEARCH_JOBS, stages
     # a one-query panel reads exactly its n_probe cells
     df = S.topk_l2_ivfpq_index(spark, index, e, [7], k=5)
+    (cells,) = partition_filter_values(df, "cell_id")
+    assert len(cells) == S.N_PROBE, cells
+
+
+@pytest.fixture(scope="module")
+def cosine_indexes(spark, sf_dir, tmp_path_factory):
+    e = Tables(spark, sf_dir).embeddings
+    root = tmp_path_factory.mktemp("cosine")
+    S.build_ivf_index(e, str(root / "ivf"))
+    S.build_graph_index(e, str(root / "graph"))
+    S.build_sq8_index(e, str(root / "sq8"))
+    return e, str(root)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize("panel", PANELS)
+def test_cosine_index_rows_equal_in_memory_search(spark, cosine_indexes, panel):
+    e, root = cosine_indexes
+    ivf = _rows(S.topk_cosine_ivf_index(spark, f"{root}/ivf", panel, k=5))
+    assert ivf == _rows(S.topk_cosine_ivf(e, panel, k=5))
+    graph = _rows(S.topk_cosine_graph_index(spark, f"{root}/graph", panel, k=5))
+    assert graph == _rows(S.topk_cosine_ivf_graph(e, panel, k=5))
+    present = [q for q in panel if q != ABSENT_ID]
+    for got in (ivf, graph):
+        assert {r[0] for r in got} == set(present)
+        assert len(got) == 5 * len(present)
+
+
+@pytest.mark.parametrize(
+    "index, search, bound",
+    [
+        ("ivf", S.topk_cosine_ivf_index, IVF_SEARCH_JOBS),
+        ("graph", S.topk_cosine_graph_index, GRAPH_SEARCH_JOBS),
+        ("sq8", S.topk_cosine_sq8_index, SQ8_SEARCH_JOBS),
+    ],
+)
+def test_cosine_index_search_jobs(spark, cosine_indexes, index, search, bound):
+    _, root = cosine_indexes
+    path = f"{root}/{index}"
+    search(spark, path, [7, 8], k=5).collect()  # warm
+    rows, jobs, stages = _jobs_and_stages(
+        spark, lambda: search(spark, path, [7, 8], k=5).collect()
+    )
+    assert len(rows) == 10
+    assert not [s for s in stages if s.startswith("parquet at ")], stages
+    assert jobs <= bound, stages
+
+
+def test_ivf_index_one_query_reads_n_probe_cells(spark, cosine_indexes):
+    _, root = cosine_indexes
+    df = S.topk_cosine_ivf_index(spark, f"{root}/ivf", [7], k=5)
     (cells,) = partition_filter_values(df, "cell_id")
     assert len(cells) == S.N_PROBE, cells
 

@@ -1332,6 +1332,92 @@ def test_ivfpq_index_rejects_mismatched_dims(spark, sf_dir, tmp_path):
     assert len(S.topk_l2_ivfpq_index(spark, index, e, [0, 1], k=5).collect()) == 10
 
 
+def _dim_batch(spark, sf_dir):
+    """An 8-dim corpus (the first 8 components of the unit-SF
+    embeddings, vec_id < 100) and an ingest batch holding one 6-dim and
+    one 10-dim vector."""
+    from distributed_query_engine_spark.catalog import Tables
+
+    e = Tables(spark, sf_dir).embeddings.filter(F.col("vec_id") < 100)
+    corpus = e.withColumn("embedding", F.slice("embedding", 1, 8))
+    batch = spark.createDataFrame(
+        [(1000, [0.1] * 6, 0), (1001, [0.2] * 10, 0)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    return corpus, batch
+
+
+_WRONG_DIM = r"vector dim does not match the index: expected 8, got (6|10) \(vec_id 100[01]\)"
+
+
+@pytest.mark.parametrize(
+    "build, append",
+    [
+        (lambda e, p: S.build_ivf_index(e, p, n_cells=4), S.append_to_ivf_index),
+        (lambda e, p: S.build_graph_index(e, p, n_cells=4), S.append_to_graph_index),
+        (S.build_sq8_index, S.append_to_sq8_index),
+    ],
+    ids=["ivf", "graph", "sq8"],
+)
+def test_cosine_index_append_rejects_wrong_dim(spark, sf_dir, tmp_path, build, append):
+    """An append whose batch vectors differ in dim from the stored
+    quantizer (IVF/graph centroids, SQ8 dims) fails with a message
+    naming the vec_id — before the guard, SQ8 appended silently and
+    then scored the wrong-dim query as cosine=None, and IVF/graph
+    failed inside a numpy worker with a matmul core-dimension error."""
+    corpus, batch = _dim_batch(spark, sf_dir)
+    index = str(tmp_path / "index")
+    build(corpus, index)
+    with pytest.raises(Exception, match=_WRONG_DIM):
+        append(spark, batch, index)
+
+
+def test_ivf_probe_ties_go_to_the_lower_cell(spark):
+    """Probe ranking is (p_cos DESC, cell_id): of two identical
+    centroids the lower cell_id is probed first, whatever their row
+    order."""
+    cent_rows = [(7, [1, 0], 1), (3, [1, 0], 1), (5, [1, 1], 2)]
+    corpus = spark.createDataFrame(
+        [(10, [1, 0], 1, 3), (11, [1, 0], 1, 5), (12, [1, 0], 1, 7)],
+        "vec_id long, ivec array<long>, nsq long, cell_id long",
+    )
+    panel = [(0, [1, 0], 1)]
+    for n_probe, cells in ((1, {3}), (2, {3, 7}), (3, {3, 5, 7})):
+        got = S._probed(corpus, cent_rows, panel, n_probe)
+        assert {r["cell_id"] for r in got.collect()} == cells
+
+
+def test_driver_cosine_matches_spark_bit_for_bit(spark, sf_dir):
+    """The driver-side probe cosine (functions.vectors.cosine_py) equals
+    Spark's cosine_from_ints on every (query, centroid) pair of the
+    default IVF index."""
+    from distributed_query_engine_spark.catalog import Tables
+    from distributed_query_engine_spark.functions.vectors import (
+        cosine_from_ints,
+        cosine_py,
+        dot_long,
+    )
+
+    base = S._vectors(Tables(spark, sf_dir).embeddings)
+    pairs = (
+        S._panel(base, list(range(25)))
+        .crossJoin(base.filter(F.col("vec_id") < S.N_CELLS))
+        .select(
+            "q_ivec",
+            "q_nsq",
+            "ivec",
+            "nsq",
+            cosine_from_ints(
+                dot_long(F.col("q_ivec"), F.col("ivec")), F.col("q_nsq"), F.col("nsq")
+            ).alias("cosine"),
+        )
+        .collect()
+    )
+    assert len(pairs) == 25 * S.N_CELLS
+    for r in pairs:
+        assert cosine_py(r["q_ivec"], r["q_nsq"], r["ivec"], r["nsq"]) == r["cosine"]
+
+
 def test_content_addressed_index_invalidates_on_regenerated_source(
     spark, tmp_path
 ):

@@ -106,14 +106,28 @@ def test_incremental_dedup_broadcasts_batch_side(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _ivf_probed_cells(df) -> set:
+    """The literal cell_id set the assignments scan of a stored-index
+    IVF search is pruned to: the probes are ranked on the driver from
+    the collected centroids, at most n_probe cells per panel query."""
+    from distributed_query_engine_spark.operators import similarity as S
+    from distributed_query_engine_spark.plans.llm._shared import _QUERY_IDS
+
+    from .conftest import partition_filter_values
+
+    (cells,) = partition_filter_values(df, "cell_id")
+    assert 0 < len(cells) <= len(_QUERY_IDS) * S.N_PROBE, cells
+    return cells
+
+
 def test_ivf_index_search_partition_prunes(spark, sf_dir):
-    # The persisted IVF index is hive-partitioned by cell_id; the probe
-    # join must trigger dynamic partition pruning so the search scans
-    # only probed cells' files — the read-n_probe/n_cells-of-the-index
+    # The persisted IVF index is hive-partitioned by cell_id; the search
+    # scans only the probed cells' files through a literal cell_id
+    # partition filter — the read-n_probe/n_cells-of-the-index
     # contract, visible in the plan.
-    plan = _plan(_q("llm_similarity_ivf_index", spark, sf_dir))
-    assert "dynamicpruning" in plan.lower()
-    assert "CartesianProduct" not in plan
+    df = _q("llm_similarity_ivf_index", spark, sf_dir)
+    _ivf_probed_cells(df)
+    assert "CartesianProduct" not in _plan(df)
 
 
 def test_ivf_incremental_assignment_broadcasts_and_search_prunes(
@@ -125,8 +139,8 @@ def test_ivf_incremental_assignment_broadcasts_and_search_prunes(
     # matrix — no join node and no exchange AT ALL (the r9-era shape
     # was crossJoin(broadcast) + max_by, i.e. BroadcastNestedLoopJoin;
     # the kernel replaced its ~27 us/pair interpreted dots). The
-    # search over the appended index keeps the dynamic-partition-
-    # pruned probe reads.
+    # search over the appended index keeps the partition-pruned probe
+    # reads: a literal cell_id set of at most n_probe cells per query.
     from pyspark.sql import functions as F
 
     from distributed_query_engine_spark.catalog import Tables
@@ -141,15 +155,15 @@ def test_ivf_incremental_assignment_broadcasts_and_search_prunes(
     index = _ivf_incr_index_dir(sf_dir)
     is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
     S.build_ivf_index(e.filter(~is_new), index)
-    cents = spark.read.parquet(f"{index}/centroids")
+    cents = S._ivf_cent_rows(spark, index)
     base = S.with_int_vec(e.filter(is_new)).select("vec_id", "ivec", "nsq")
     assign_plan = _plan(S._assign_to(base, cents))
     assert "MapInPandas" in assign_plan, assign_plan
     assert "Exchange" not in assign_plan, assign_plan
     assert "CartesianProduct" not in assign_plan
-    search_plan = _plan(_q("llm_similarity_ivf_incremental", spark, sf_dir))
-    assert "dynamicpruning" in search_plan.lower()
-    assert "CartesianProduct" not in search_plan
+    search = _q("llm_similarity_ivf_incremental", spark, sf_dir)
+    _ivf_probed_cells(search)
+    assert "CartesianProduct" not in _plan(search)
 
 
 def test_pq_adc_scan_broadcasts_tables_and_partial_aggregates(spark, sf_dir):
